@@ -80,10 +80,13 @@ class ReceiptsSpec extends AnyFunSuite {
     val repoFiles = new java.io.File(".").listFiles().map(_.getName)
     val stale = current.flatMap { case (fam, r) =>
       val famRe = (java.util.regex.Pattern.quote(fam) + """_r(\d+)\.json""").r
-      val maxPresent = repoFiles.collect { case famRe(n) => n.toInt }.max
-      if (maxPresent > r)
-        Some(s"$fam: index marks r$r current but ${fam}_r$maxPresent.json exists at HEAD")
-      else None
+      repoFiles.collect { case famRe(n) => n.toInt }.maxOption match {
+        case None =>
+          Some(s"$fam: index marks r$r current but no ${fam}_rN.json exists at HEAD")
+        case Some(maxPresent) if maxPresent > r =>
+          Some(s"$fam: index marks r$r current but ${fam}_r$maxPresent.json exists at HEAD")
+        case _ => None
+      }
     }
     assert(stale.isEmpty, s"stale current-pointers in RECEIPTS.md: ${stale.mkString("; ")}")
   }
