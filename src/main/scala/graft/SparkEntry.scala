@@ -708,7 +708,7 @@ object SparkEntry {
     }),
 
     // -- the same two-batch fold through the MERGE-ON-READ store: deltas
-    //    rewrite only touched buckets, auto-compaction folds the chain, and
+    //    hold only the changed records, auto-compaction folds the chain, and
     //    the read-side must still equal the one-shot oracle --
     "nerd_incremental_mor" -> ((s, dir) => {
       import s.implicits._

@@ -83,13 +83,17 @@ object EntityFold {
         // re-render. At a billion-record snapshot with a small micro-batch,
         // per-batch codec cost is O(touched entities), not O(snapshot).
         if (ts.isEmpty) states
-        else {
-          val existing = states.buffered.headOption.map(s => jsonToRec(s.json))
-          foldAll(existing, ts, now, eid)
-            .map(r => EntityState(etype, eid, TaskCodec.recToJson(r))).iterator
-        }
+        else foldRecord(states.buffered.headOption.map(_.json), ts, now, eid)
+          .map(EntityState(etype, eid, _)).iterator
       }
   }
+
+  /** Fold one entity's tasks onto its stored record (JSON, if any): the
+    * record they leave, as JSON, or None when they end in `!DELETE`.
+    */
+  def foldRecord(json: Option[String], tasks: Iterator[UpdateTask], now: Long,
+                 eid: Long): Option[String] =
+    foldAll(json.map(jsonToRec), tasks, now, eid).map(TaskCodec.recToJson)
 
   private def foldAll(initial: Option[Rec], it: Iterator[UpdateTask], now: Long,
                       eid: Long): Option[Rec] =

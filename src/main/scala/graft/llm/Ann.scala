@@ -84,7 +84,7 @@ object Ann {
     asDouble(embeddings, "embedding")
       .groupBy(col(clusterCol).as("cluster"))
       .agg(call_function("vec_sum", col("embedding")).as("vs"),
-        count(lit(1)).as("n"))
+        count(col("embedding")).as("n")) // vec_sum skips null embeddings; so does the count
       .select(col("cluster"),
         transform(col("vs"), x => x / col("n")).as("centroid"))
   }

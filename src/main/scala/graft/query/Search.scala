@@ -175,7 +175,7 @@ object Search {
   def eventPivot(events: DataFrame, entities: DataFrame, today: String,
                  categories: Seq[String], days: Int = 5): DataFrame =
     events
-      .join(entities.select(col("entity").as("user_id")).distinct(), Seq("user_id"), "left_semi")
+      .join(entities.select(col("entity").as("user_id")), Seq("user_id"), "left_semi")
       .withColumn("d", to_date(col("ts")))
       .filter(datediff(lit(today).cast("date"), col("d")) < days &&
         datediff(lit(today).cast("date"), col("d")) >= 0)
@@ -192,7 +192,7 @@ object Search {
     */
   def eventListing(events: DataFrame, entities: DataFrame, limit: Int): DataFrame =
     events
-      .join(entities.select(col("entity").as("user_id")).distinct(), Seq("user_id"), "left_semi")
+      .join(entities.select(col("entity").as("user_id")), Seq("user_id"), "left_semi")
       .withColumn("ts_sec", unix_timestamp(col("ts")))
       .orderBy(col("ts_sec").desc, col("event_id").asc)
       .limit(limit)

@@ -90,34 +90,92 @@ object StreamIngest {
       // restatement of the reference's int-IP index (SURVEY §4,
       // core/mongodb.py:81-95). The per-batch shuffle is the standard
       // layout-maintenance cost of a sorted store.
-      ds.repartitionByRange(org.apache.spark.sql.functions.col("eid"))
-        .sortWithinPartitions("eid")
-        .write.mode("overwrite").parquet(s"$root/v$next")
+      writeParquet(ds.repartitionByRange(col("eid")).sortWithinPartitions("eid"), s"$root/v$next")
     }
     override def applyBatch(tasks: Dataset[UpdateTask], nowEpoch: Long): Unit =
       write(EntityFold.applyToSnapshot(read(), tasks, nowEpoch))
   }
 
-  /** Merge-on-read snapshot store: entities hash into `numBuckets` buckets;
-    * a micro-batch rewrites ONLY the buckets its tasks touch, writing them as
-    * a new delta version with a manifest of the buckets it owns. Reads
-    * resolve each bucket to the newest version that wrote it, so per-batch
-    * write cost is O(touched buckets), not O(snapshot) — the difference that
-    * matters when a billion-record snapshot meets a thousand-task batch.
-    * `compact()` folds all live buckets into one full version and drops the
-    * superseded deltas (the read-amplification ceiling).
-    *
-    * Layout: `root/v<n>/bucket=<b>/part-....parquet` + `root/v<n>/_buckets.json`.
-    * The manifest — not the directory listing — is the source of truth for
-    * ownership: a bucket whose fold emptied out (all entities deleted) has a
-    * manifest entry but no directory, and must NOT resurrect from an older
-    * version.
+  /** Parquet write shared by the stores: zstd pages, because the records
+    * are JSON text, which zstd shrinks far more than the snappy default.
     */
-  /** @param maxDeltas if > 0, `applyBatch` auto-compacts once the delta
-    *                   chain exceeds this many versions — the read-side scans
-    *                   at most `maxDeltas + 1` version directories between
-    *                   compactions, bounding read amplification under a
-    *                   long-running micro-batch stream.
+  private def writeParquet(ds: Dataset[_], path: String, partitionBy: String*): Unit =
+    ds.write.mode("overwrite").option("compression", "zstd")
+      .partitionBy(partitionBy: _*).parquet(path)
+
+  /** One row of the merge-on-read store's merge exchange: a stored row
+    * (`kind` 0, from version `version`; `json` null marks a tombstone) or a
+    * batch task (`kind` 1, with `seq`, `src` and `ops`).
+    */
+  private[streaming] final case class MergeRow(bucket: Int, etype: String, eid: Long, kind: Int,
+                                               version: Long, json: String, seq: Long,
+                                               src: String, ops: String)
+
+  /** A row as the merge-on-read store keeps it; `json` null is a tombstone. */
+  private[streaming] final case class StoredRow(bucket: Int, etype: String, eid: Long,
+                                                json: String)
+
+  /** Merge one partition of [[MergeRow]]s sorted by (bucket, etype, eid,
+    * kind, version): each key's run is its stored rows, oldest version
+    * first, then its tasks, which fold onto its newest stored row. For a
+    * delta, a key yields its folded record, or a tombstone when the fold
+    * deletes a live record, and a key without tasks yields nothing; for a
+    * `base`, every key yields its live record, if it has one.
+    */
+  private def mergeRuns(rows: Iterator[MergeRow], now: Long,
+                        base: Boolean): Iterator[StoredRow] = {
+    val in = rows.buffered
+    new Iterator[Option[StoredRow]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Option[StoredRow] = {
+        val head = in.head
+        var live: Option[String] = None
+        val tasks = scala.collection.mutable.ArrayBuffer.empty[UpdateTask]
+        while (in.hasNext && in.head.eid == head.eid && in.head.etype == head.etype) {
+          val r = in.next()
+          if (r.kind == 0) live = Option(r.json)
+          else tasks += UpdateTask(r.etype, r.eid, r.seq, r.src, r.ops)
+        }
+        val out =
+          if (tasks.isEmpty) { if (base) live else None }
+          else EntityFold.foldRecord(live, tasks.iterator, now, head.eid) match {
+            case None if live.isDefined && !base => Some(null) // tombstone
+            case folded => folded
+          }
+        out.map(StoredRow(head.bucket, head.etype, head.eid, _))
+      }
+    }.flatten
+  }
+
+  /** Merge-on-read snapshot store: a micro-batch writes only the records it
+    * changed. Entities hash into `numBuckets` buckets; a delta version holds
+    * the folded record of each key the batch's tasks touch, plus a
+    * tombstone row (`json` null) for each live record the fold deleted, so
+    * per-batch write cost is O(touched entities), not O(snapshot). Reads
+    * keep the newest row per `(etype, eid)` across the live versions and
+    * drop tombstones. `compact()` folds the live versions into one base
+    * version without tombstones and drops the rest (the read-amplification
+    * ceiling).
+    *
+    * An apply runs one exchange: the touched buckets' stored rows and the
+    * batch's tasks, repartitioned by bucket and sorted by key, with each
+    * key's run folded in `mapPartitions`. Compaction resolves newest-wins in
+    * the same single bucket exchange.
+    *
+    * Layout: `root/v<n>/bucket=<b>/part-....parquet` (zstd pages, one file
+    * per bucket, sorted by `(etype, eid)` so parquet min/max zone maps prune
+    * subnet/range scans) + `root/v<n>/_buckets.json`, the manifest
+    * `{"buckets":[...],"batches":[...],"base":...}`: the buckets the version
+    * wrote, the micro-batch ids it committed, and whether it is a base. A
+    * base hides every older version, so a compaction that dies before
+    * deleting what it absorbed cannot bring a deleted record back.
+    *
+    * @param maxDeltas if > 0, a batch that would grow the live chain past
+    *                  this many versions is written as a base instead of a
+    *                  delta (the compaction rides the batch's exchange), so
+    *                  reads scan at most `maxDeltas` version directories —
+    *                  bounded read amplification under a long-running
+    *                  micro-batch stream.
     */
   final class MergeOnReadSnapshotStore(spark: SparkSession, root: String,
                                        numBuckets: Int = 64,
@@ -142,86 +200,104 @@ object StreamIngest {
     private def manifestPath(v: Long) =
       new org.apache.hadoop.fs.Path(s"$root/v$v/_buckets.json")
 
-    /** The manifest doubles as the COMMIT RECORD: `versions` only lists
+    /** A version's manifest, its COMMIT RECORD: `versions` only lists
       * directories whose manifest exists, so a version that crashed between
       * the parquet write and the manifest write is invisible to readers and
-      * healed by the retry's overwrite. Two formats are read: the legacy
-      * bare bucket array, and the object form
-      * `{"buckets":[...],"batches":[...]}` whose `batches` carries the
-      * micro-batch ids this version (or, after compaction, its absorbed
-      * ancestors) committed — the idempotent-replay ledger.
+      * healed by the retry's overwrite. `batches` carries the micro-batch
+      * ids this version (or, for a base, its absorbed ancestors) committed —
+      * the idempotent-replay ledger.
       */
-    /** Per-instance parse cache: a manifest is immutable once written (it IS
-      * the commit record), so each version's file is opened and parsed at
-      * most once per store instance — one micro-batch otherwise re-reads
-      * every delta's manifest several times (ledger check, owner
-      * resolution, compaction sweep), which on an object store is a pile of
-      * sequential metadata round-trips. Version numbers are never reused
-      * (`next` is strictly increasing, compaction continues past the
-      * deleted range), so entries can't go stale; `compact()` still drops
-      * the absorbed ids for hygiene.
+    private case class Manifest(buckets: Seq[Int], batches: Seq[Long], base: Boolean)
+
+    /** Per-instance parse cache: a manifest is immutable once written, so
+      * each version's file is opened and parsed at most once per store
+      * instance (on an object store every open is a metadata round-trip).
+      * Version numbers are never reused (`next` is strictly increasing,
+      * compaction continues past the deleted range), so entries can't go
+      * stale; `compact()` still drops the absorbed ids for hygiene.
       */
     private val manifestCache =
-      new java.util.concurrent.ConcurrentHashMap[Long, (Seq[Int], Seq[Long])]()
+      new java.util.concurrent.ConcurrentHashMap[Long, Manifest]()
 
-    private def readManifest(v: Long): (Seq[Int], Seq[Long]) =
+    private def readManifest(v: Long): Manifest =
       manifestCache.computeIfAbsent(v, _ => {
         val in = fs.open(manifestPath(v))
         val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
         val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
         import scala.jdk.CollectionConverters._
-        if (node.isArray) (node.elements().asScala.map(_.asInt()).toSeq, Seq.empty)
-        else (node.get("buckets").elements().asScala.map(_.asInt()).toSeq,
-          Option(node.get("batches")).toSeq
-            .flatMap(_.elements().asScala.map(_.asLong()).toSeq))
+        def longs(field: String) = node.path(field).elements().asScala.map(_.asLong()).toSeq
+        Manifest(longs("buckets").map(_.toInt), longs("batches"), node.path("base").asBoolean(false))
       })
 
-    private def writeManifest(v: Long, buckets: Seq[Int],
-                              batches: Seq[Long] = Seq.empty): Unit = {
+    private def writeManifest(v: Long, m: Manifest): Unit = {
       val out = fs.create(manifestPath(v), true)
-      val json = s"""{"buckets":${buckets.sorted.mkString("[", ",", "]")},""" +
-        s""""batches":${batches.sorted.mkString("[", ",", "]")}}"""
+      val json = s"""{"buckets":${m.buckets.sorted.mkString("[", ",", "]")},""" +
+        s""""batches":${m.batches.sorted.mkString("[", ",", "]")},"base":${m.base}}"""
       try out.write(json.getBytes("UTF-8"))
       finally out.close()
     }
 
-    /** bucket → newest version owning it (later versions shadow earlier). */
-    private def owners: Map[Int, Long] =
-      versions.foldLeft(Map.empty[Int, Long]) { (acc, v) =>
-        acc ++ readManifest(v)._1.map(_ -> v)
-      }
+    /** The versions a reader sees: the newest base and every version after
+      * it (all of `vs` before the first compaction).
+      */
+    private def live(vs: Seq[Long]): Seq[Long] =
+      vs.drop(math.max(0, vs.lastIndexWhere(readManifest(_).base)))
 
     /** Micro-batch ids committed into this store (carried forward through
       * compaction) — the replay-dedup ledger of [[applyBatchIdempotent]]. */
     def committedBatchIds: Set[Long] =
-      versions.flatMap(v => readManifest(v)._2).toSet
+      versions.flatMap(v => readManifest(v).batches).toSet
 
-    private val stateSchema =
-      org.apache.spark.sql.Encoders.product[EntityState].schema
-        .add("bucket", org.apache.spark.sql.types.IntegerType)
+    private val fileSchema = org.apache.spark.sql.Encoders.product[EntityState].schema
+      .add("bucket", org.apache.spark.sql.types.IntegerType)
 
     private def bucketCol(etype: org.apache.spark.sql.Column,
                           eid: org.apache.spark.sql.Column) =
       pmod(hash(etype, eid), lit(numBuckets))
 
-    /** Read the live state of a bucket subset: for each delta version, scan
-      * only the bucket partitions that version still owns (directory-level
-      * partition pruning via the `bucket=` filter).
+    /** The stored rows of versions `vs` as merge rows, scanning only the
+      * `bucket=` directories in `buckets` when given. The version comes
+      * from each file's path, not a literal, so the plan of a chain of a
+      * given length is the same for every batch and its generated code is
+      * reused.
       */
-    private def readOwned(wanted: Int => Boolean): Dataset[EntityState] = {
-      val byVersion = owners.toSeq.filter { case (b, _) => wanted(b) }
-        .groupBy(_._2).view.mapValues(_.map(_._1)).toSeq
-      val parts = byVersion.map { case (v, buckets) =>
-        spark.read.schema(stateSchema)
+    private def stored(vs: Seq[Long], buckets: Option[Set[Int]]): Dataset[MergeRow] =
+      vs.map { v =>
+        val all = spark.read.schema(fileSchema)
           .option("basePath", s"$root/v$v")
           .parquet(s"$root/v$v")
-          .where(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-          .select("etype", "eid", "json").as[EntityState]
-      }
-      parts.reduceOption(_ union _).getOrElse(spark.emptyDataset[EntityState])
-    }
+        buckets.fold(all)(bs => all.where(col("bucket").isin(bs.toSeq.map(Integer.valueOf): _*)))
+          .select(col("bucket"), col("etype"), col("eid"), lit(0).as("kind"),
+            regexp_extract(col("_metadata.file_path"), "/v(\\d+)/bucket=", 1).cast("long")
+              .as("version"),
+            col("json"), lit(0L).as("seq"), lit(null).cast("string").as("src"),
+            lit(null).cast("string").as("ops"))
+          .as[MergeRow]
+      }.reduceOption(_ union _).getOrElse(spark.emptyDataset[MergeRow])
 
-    override def read(): Dataset[EntityState] = readOwned(_ => true)
+    /** The store's one exchange: co-locate each bucket, sort each key's run
+      * and fold it with [[mergeRuns]]. The chain's small files would each
+      * make a map task, so they are coalesced first; the explicit partition
+      * count keeps adaptive execution from folding all buckets into one
+      * reduce task.
+      */
+    private def merge(rows: Dataset[MergeRow], now: Long, base: Boolean): Dataset[StoredRow] =
+      rows.coalesce(spark.sparkContext.defaultParallelism)
+        .repartition(numBuckets, col("bucket"))
+        .sortWithinPartitions("bucket", "etype", "eid", "kind", "version")
+        .mapPartitions(mergeRuns(_, now, base))
+
+    /** Write `rows` as version `v`: one file per bucket, key-sorted. */
+    private def writeVersion(rows: Dataset[StoredRow], v: Long): Unit =
+      writeParquet(rows.sortWithinPartitions("bucket", "etype", "eid"), s"$root/v$v", "bucket")
+
+    override def read(): Dataset[EntityState] = {
+      val vs = live(versions)
+      // one version holds one row per key: nothing to merge
+      val rows = if (vs.size <= 1) stored(vs, None).toDF()
+        else merge(stored(vs, None), 0L, base = true).toDF()
+      rows.where(col("json").isNotNull).select("etype", "eid", "json").as[EntityState]
+    }
 
     override def applyBatch(tasks: Dataset[UpdateTask], nowEpoch: Long): Unit =
       applyInternal(tasks, nowEpoch, Seq.empty)
@@ -246,53 +322,54 @@ object StreamIngest {
       // One directory listing per batch (the store is single-writer by
       // contract, so the listing can't change under us mid-batch).
       val vs = versions
+      val keyed = tasks.select(bucketCol(col("etype"), col("eid")).as("bucket"), col("etype"),
+        col("eid"), lit(1).as("kind"), lit(0L).as("version"), lit(null).cast("string").as("json"),
+        col("seq"), col("src"), col("ops")).as[MergeRow]
       // The task set is read twice (bucket discovery + the fold): pin it for
       // the batch so a streaming source isn't re-scanned.
-      tasks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        // Touched-bucket set: tiny by construction (≤ numBuckets ints).
-        val touched = tasks.select(bucketCol(col("etype"), col("eid")))
-          .distinct().as[Int].collect().toSet
+        // Touched-bucket set: one pass, no shuffle (≤ numBuckets ints a partition).
+        val touched = keyed.select("bucket").as[Int]
+          .mapPartitions(_.toSet.iterator).collect().toSet
         if (touched.isEmpty) return
-        val folded = EntityFold.applyToSnapshot(readOwned(touched), tasks, nowEpoch)
+        val chain = live(vs)
         val next = vs.lastOption.getOrElse(-1L) + 1
-        // One file per bucket, eid-sorted inside: parquet min/max zone maps
-        // keep pruning subnet/range scans, same as the full-rewrite store's
-        // layout.
-        folded
-          .withColumn("bucket", bucketCol(col("etype"), col("eid")))
-          .repartition(col("bucket"))
-          .sortWithinPartitions("bucket", "eid")
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$root/v$next")
-        writeManifest(next, touched.toSeq, batchIds)
-        if (maxDeltas > 0 && vs.size + 1 > maxDeltas) compact()
-      } finally tasks.unpersist()
+        // A batch that would grow the chain past maxDeltas writes a base
+        // instead of a delta: the compaction rides the batch's own exchange.
+        val base = maxDeltas > 0 && chain.size + 1 > maxDeltas
+        val rows = stored(chain, if (base) None else Some(touched)).union(keyed)
+        writeVersion(merge(rows, nowEpoch, base), next)
+        if (base) commitBase(next, vs, batchIds)
+        else writeManifest(next, Manifest(touched.toSeq, batchIds, base = false))
+      } finally keyed.unpersist()
     }
 
-    /** Rewrite the live snapshot as one full version and drop superseded
-      * deltas — bounds read amplification after many small batches.
+    /** Rewrite the live snapshot as one base version and drop every older
+      * version — bounds read amplification after many small batches.
       */
     def compact(): Unit = {
       val olds = versions
       if (olds.isEmpty) return
       val next = olds.last + 1
-      // absorbed batch ids ride along so the replay ledger survives the
-      // deltas' deletion
-      val absorbed = olds.flatMap(v => readManifest(v)._2).distinct
-      read()
-        .withColumn("bucket", bucketCol(col("etype"), col("eid")))
-        .repartition(col("bucket"))
-        .sortWithinPartitions("bucket", "eid")
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$root/v$next")
-      writeManifest(next, (0 until numBuckets).toSeq, absorbed)
+      writeVersion(merge(stored(live(olds), None), 0L, base = true), next)
+      commitBase(next, olds, Seq.empty)
+    }
+
+    /** Commit version `next` as the base that absorbs `olds`, then delete
+      * them. Their batch ids ride along, so the replay ledger survives.
+      */
+    private def commitBase(next: Long, olds: Seq[Long], batchIds: Seq[Long]): Unit = {
+      val absorbed = olds.flatMap(v => readManifest(v).batches) ++ batchIds
+      writeManifest(next, Manifest(0 until numBuckets, absorbed.distinct, base = true))
       olds.foreach { v =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$root/v$v"), true)
         manifestCache.remove(v)
       }
     }
 
-    /** Delta-version count since the last compaction (read-amp telemetry). */
-    def versionCount: Int = versions.size
+    /** Live-version count since the last compaction (read-amp telemetry). */
+    def versionCount: Int = live(versions).size
   }
 
   /** One micro-batch: validate → derive tasks → fold onto the snapshot. */
@@ -461,10 +538,8 @@ object StreamIngest {
       * a replayed id returns without touching storage. */
     def applyBatch(tasks: Dataset[UpdateTask], nowEpoch: Long, batchId: Long): Unit = {
       if (committedBatches.contains(batchId)) return // replay after commit
-      EntityFold.applyToSnapshot(read(), tasks, nowEpoch)
-        .repartitionByRange(col("eid"))
-        .sortWithinPartitions("eid")
-        .write.mode("overwrite").parquet(s"$root/b$batchId")
+      writeParquet(EntityFold.applyToSnapshot(read(), tasks, nowEpoch)
+        .repartitionByRange(col("eid")).sortWithinPartitions("eid"), s"$root/b$batchId")
     }
   }
 

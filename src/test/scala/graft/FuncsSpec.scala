@@ -90,4 +90,38 @@ class FuncsSpec extends AnyFunSuite {
     val allWant = rows.groupBy(_._1).map { case (gk, vs) => gk -> vs.map(_._2).sorted }
     assert(all === allWant)
   }
+
+  test("vec_sum buffer: null inputs skipped, empty partials absorbed, mismatches fail, serde round-trips") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val agg = graft.functions.VecSum(BoundReference(0, ArrayType(DoubleType), nullable = true))
+    def row(xs: Double*) = InternalRow(new GenericArrayData(xs.toArray[Any]))
+
+    // update: a null input leaves the buffer as it was, empty or not
+    val empty = agg.createAggregationBuffer()
+    assert(agg.update(empty, InternalRow(null)).isEmpty)
+    val one = agg.update(agg.createAggregationBuffer(), row(1.0, 2.0))
+    assert(agg.update(one, InternalRow(null)).toSeq == Seq(1.0, 2.0))
+    assert(agg.update(one, row(0.5, 0.5)).toSeq == Seq(1.5, 2.5))
+
+    // merge: an empty partial (a group whose rows were all null) is absorbed
+    // from either side
+    assert(agg.merge(Array(1.0, 2.0), agg.createAggregationBuffer()).toSeq == Seq(1.0, 2.0))
+    assert(agg.merge(agg.createAggregationBuffer(), Array(3.0, 4.0)).toSeq == Seq(3.0, 4.0))
+    assert(agg.merge(Array(1.0, 2.0), Array(3.0, 4.0)).toSeq == Seq(4.0, 6.0))
+    assert(agg.eval(agg.createAggregationBuffer()) == null)
+
+    // a length mismatch fails fast instead of truncating
+    val u = intercept[IllegalArgumentException](agg.update(Array(1.0, 2.0), row(1.0, 2.0, 3.0)))
+    assert(u.getMessage.contains("length mismatch"))
+    val m = intercept[IllegalArgumentException](agg.merge(Array(1.0), Array(1.0, 2.0)))
+    assert(m.getMessage.contains("length mismatch"))
+
+    // the partial buffer survives the shuffle's serialize/deserialize
+    val buf = Array(1.25, -0.0, Double.MaxValue, 1e-300)
+    assert(agg.deserialize(agg.serialize(buf)).toSeq == buf.toSeq)
+    assert(agg.deserialize(agg.serialize(Array.emptyDoubleArray)).isEmpty)
+  }
 }

@@ -1621,4 +1621,17 @@ class LlmOpsSpec extends AnyFunSuite {
       .findAllIn(snap.queryExecution.executedPlan.toString).size
     assert(exchanges <= 2, s"snapshot plan grew to $exchanges exchanges")
   }
+
+  test("centroids average only the non-null embeddings of a cluster") {
+    import spark.implicits._
+    val emb = Seq(
+      (0L, 1, Some(Seq(1.0f, 2.0f))),
+      (1L, 1, Some(Seq(3.0f, 6.0f))),
+      (2L, 1, None),                   // no embedding: must not pull toward zero
+      (3L, 2, Some(Seq(5.0f, 5.0f)))
+    ).toDF("vec_id", "label", "embedding")
+    val got = graft.llm.Ann.centroids(emb).as[(Int, Seq[Double])].collect().toMap
+    assert(got(1) == Seq(2.0, 4.0))
+    assert(got(2) == Seq(5.0, 5.0))
+  }
 }

@@ -597,6 +597,98 @@ class StreamingSpec extends AnyFunSuite {
     assert(rec1("total").toString == "2") // batch 1 folded once, replay ignored
   }
 
+  test("merge-on-read: delete leaves a tombstone, compaction drops it, re-create starts fresh") {
+    import spark.implicits._
+    import graft.fold.UpdateTask
+    import graft.ops.TaskCodec
+    val root = Files.createTempDirectory("graft-mor-tomb").toString
+    val store = new StreamIngest.MergeOnReadSnapshotStore(spark, root, numBuckets = 4)
+    def rows(v: Int) = spark.read.parquet(s"$root/v$v")
+    store.applyBatch(Seq(
+      UpdateTask("ip", 1L, 0L, "t", """[["add","n",5]]"""),
+      UpdateTask("ip", 2L, 0L, "t", """[["add","n",7]]""")).toDS(), 1000L)
+    store.applyBatch(Seq(UpdateTask("ip", 1L, 1L, "t", """[["event","!DELETE"]]""")).toDS(), 1001L)
+    // the delta holds only the deleted key, as a tombstone
+    assert(rows(1).collect().map(r => (r.getAs[Long]("eid"), r.getAs[String]("json"))).toSeq ==
+      Seq((1L, null)))
+    assert(store.read().collect().map(_.eid).toSet == Set(2L))
+    store.compact()
+    assert(store.versionCount == 1)
+    // the base keeps live records only
+    assert(rows(2).count() == 1 && rows(2).where($"json".isNull).isEmpty)
+    store.applyBatch(Seq(UpdateTask("ip", 1L, 2L, "t", """[["add","n",1]]""")).toDS(), 1002L)
+    val recs = store.read().collect().map(s => s.eid -> TaskCodec.parseRec(s.json)).toMap
+    assert(recs.keySet == Set(1L, 2L))
+    assert(recs(1L)("n") == 1L, "re-created record carried state from before its delete")
+    assert(recs(2L)("n") == 7L)
+    store.compact()
+    assert(store.read().collect().map(s => s.eid -> TaskCodec.parseRec(s.json)).toMap == recs)
+  }
+
+  test("merge-on-read: a batch that compacts writes a base without its tombstones") {
+    import spark.implicits._
+    import graft.fold.UpdateTask
+    val root = Files.createTempDirectory("graft-mor-fused").toString
+    val store = new StreamIngest.MergeOnReadSnapshotStore(spark, root, numBuckets = 4, maxDeltas = 2)
+    store.applyBatch((0L until 10L).map(i =>
+      UpdateTask("ip", i, 0L, "t", """[["add","n",1]]""")).toDS(), 1000L)
+    store.applyBatch(Seq(UpdateTask("ip", 1L, 1L, "t", """[["add","n",1]]""")).toDS(), 1001L)
+    assert(store.versionCount == 2)
+    // the third version would exceed maxDeltas: it is written as the base
+    store.applyBatch(Seq(UpdateTask("ip", 2L, 2L, "t", """[["event","!DELETE"]]"""),
+      UpdateTask("ip", 10L, 2L, "t", """[["add","n",1]]""")).toDS(), 1002L)
+    assert(store.versionCount == 1)
+    val base = spark.read.parquet(s"$root/v2")
+    assert(base.count() == 10 && base.where($"json".isNull).isEmpty)
+    assert(store.read().collect().map(_.eid).toSet == (0L to 10L).toSet - 2L)
+  }
+
+  test("merge-on-read: replaying a committed batch after a key-level delta changes nothing") {
+    import spark.implicits._
+    import graft.fold.UpdateTask
+    val root = Files.createTempDirectory("graft-mor-replay").toString
+    val store = new StreamIngest.MergeOnReadSnapshotStore(spark, root, numBuckets = 4)
+    val seed = (0L until 20L).map(i => UpdateTask("ip", i, 0L, "t", """[["add","n",1]]"""))
+    store.applyBatchIdempotent(seed.toDS(), nowEpoch = 1000L, batchId = 0)
+    val batch1 = Seq(UpdateTask("ip", 3L, 1L, "t", """[["add","n",1]]"""),
+      UpdateTask("ip", 4L, 1L, "t", """[["event","!DELETE"]]"""))
+    store.applyBatchIdempotent(batch1.toDS(), nowEpoch = 1001L, batchId = 1)
+    assert(spark.read.parquet(s"$root/v1").count() == 2, "delta is not key-level")
+    val before = store.read().collect().map(s => s.eid -> s.json).toMap
+    assert(store.versionCount == 2 && before.size == 19)
+    store.applyBatchIdempotent(batch1.toDS(), nowEpoch = 1002L, batchId = 1)
+    assert(store.versionCount == 2)
+    assert(store.read().collect().map(s => s.eid -> s.json).toMap == before)
+  }
+
+  test("merge-on-read: a delta left behind by a compaction cannot resurrect a deleted entity") {
+    import spark.implicits._
+    import graft.fold.UpdateTask
+    import java.nio.file.Paths
+    val root = Files.createTempDirectory("graft-mor-crash").toString
+    val keep = Files.createTempDirectory("graft-mor-crash-keep")
+    val store = new StreamIngest.MergeOnReadSnapshotStore(spark, root, numBuckets = 4)
+    store.applyBatch(Seq(UpdateTask("ip", 1L, 0L, "t", """[["add","n",1]]"""),
+      UpdateTask("ip", 2L, 0L, "t", """[["add","n",1]]""")).toDS(), 1000L)
+    store.applyBatch(Seq(UpdateTask("ip", 1L, 1L, "t", """[["event","!DELETE"]]""")).toDS(), 1001L)
+    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
+      Files.walk(from).forEach(p => Files.copy(p, to.resolve(from.relativize(p).toString),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+    // v0 holds entity 1 live; put it back after the compaction deleted it,
+    // as a crash between the base's commit and the deletion would leave it
+    copyTree(Paths.get(root, "v0"), keep.resolve("v0"))
+    store.compact()
+    copyTree(keep.resolve("v0"), Paths.get(root, "v0"))
+    val fresh = new StreamIngest.MergeOnReadSnapshotStore(spark, root, numBuckets = 4)
+    assert(fresh.versionCount == 1)
+    assert(fresh.read().collect().map(_.eid).toSet == Set(2L))
+    fresh.applyBatch(Seq(UpdateTask("ip", 2L, 2L, "t", """[["add","n",1]]""")).toDS(), 1002L)
+    assert(fresh.read().collect().map(_.eid).toSet == Set(2L))
+    fresh.compact()
+    assert(fresh.read().collect().map(_.eid).toSet == Set(2L))
+    assert(!Files.exists(Paths.get(root, "v0")), "compaction left the stale version behind")
+  }
+
   test("supervisor restarts a dead query; replayed batch folds exactly once") {
     import spark.implicits._
     val ev = graft.core.Tables.events(spark, sf)
