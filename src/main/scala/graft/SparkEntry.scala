@@ -690,13 +690,12 @@ object SparkEntry {
     // -- incremental fold: two batches == one shot (SURVEY §2.13 foundation) --
     "nerd_incremental" -> ((s, dir) => {
       import s.implicits._
-      import graft.fold.{EntityFold, EntityState, UpdateTask}
+      import graft.fold.{EntityFold, EntityState}
       import graft.ops.TaskCodec
       val ev = events(s, dir)
       val cutoff = maxEventIdCache.computeIfAbsent(dir, _ =>
         ev.agg(max(col("event_id"))).head.getLong(0)) / 2
-      def wire(df: DataFrame) = EventTasks.preAggregated(df)
-        .map(t => UpdateTask(t.etype, t.eid, t.seq, t.src, TaskCodec.render(t.ops)))
+      def wire(df: DataFrame) = EntityFold.wire(EventTasks.preAggregated(df))
       val now = nowEpoch(s, dir)
       val empty = s.emptyDataset[EntityState]
       val snap1 = EntityFold.applyToSnapshot(empty, wire(ev.filter(col("event_id") <= cutoff)), now)
@@ -712,13 +711,11 @@ object SparkEntry {
     //    the read-side must still equal the one-shot oracle --
     "nerd_incremental_mor" -> ((s, dir) => {
       import s.implicits._
-      import graft.fold.UpdateTask
       import graft.ops.TaskCodec
       val ev = events(s, dir)
       val cutoff = maxEventIdCache.computeIfAbsent(dir, _ =>
         ev.agg(max(col("event_id"))).head.getLong(0)) / 2
-      def wire(df: DataFrame) = EventTasks.preAggregated(df)
-        .map(t => UpdateTask(t.etype, t.eid, t.seq, t.src, TaskCodec.render(t.ops)))
+      def wire(df: DataFrame) = graft.fold.EntityFold.wire(EventTasks.preAggregated(df))
       val now = nowEpoch(s, dir)
       val store = new graft.streaming.StreamIngest.MergeOnReadSnapshotStore(
         s, scratchDir("graft-mor-q"),
@@ -1819,8 +1816,8 @@ object SparkEntry {
           // batch-id-ledgered side-effects (SideIndexLedger): foreachBatch
           // is at-least-once, and a replayed micro-batch must not duplicate
           // index rows, double-advance the drift ledger, or re-emit the
-          // probe rows — the exact replay hazard the MOR event path's
-          // TransactionalSnapshotStore already guards (r14 ask #1)
+          // probe rows — the exact replay hazard the event path's
+          // merge-on-read store guards with its batch-id ledger
           Pq.appendToIvfAdcIndexOnce(batch, idx, bid)
           Pq.compactIvfAdcIndex(s, idx, maxFilesPerCluster = 2)
           val meta = Ann.ivfIndexMeta(s, idx).get
@@ -2617,15 +2614,13 @@ object SparkEntry {
     //    unit test.
     "nerd_ondemand" -> ((s, dir) => {
       import s.implicits._
-      import graft.fold.{EntityFold, EntityState, TypedTask, UpdateTask}
+      import graft.fold.{EntityFold, EntityState, UpdateTask}
       import graft.ops.TaskCodec
       val ev = events(s, dir)
       val now = nowEpoch(s, dir)
       val ttlWeb = now + 3L * 3600
-      def wire(ts: org.apache.spark.sql.Dataset[TypedTask]) =
-        ts.map(t => UpdateTask(t.etype, t.eid, t.seq, t.src, TaskCodec.render(t.ops)))
       val snap = EntityFold.applyToSnapshot(s.emptyDataset[EntityState],
-        wire(EventTasks.preAggregated(ev)), now)
+        EntityFold.wire(EventTasks.preAggregated(ev)), now)
       val known = ev.select(col("user_id")).distinct()
         .orderBy(col("user_id")).limit(5).as[Long].collect()
       val requests = (known ++ (1L to 10L).map(maxUserId(s, dir) + _)).toSeq

@@ -54,6 +54,14 @@ object EntityFold {
     */
   implicit val typedTaskEncoder: Encoder[TypedTask] = Encoders.kryo[TypedTask]
 
+  /** Typed tasks in the JSON wire form that [[applyToSnapshot]] and the
+    * entity store fold.
+    */
+  def wire(ts: Dataset[TypedTask]): Dataset[UpdateTask] = {
+    import ts.sparkSession.implicits._
+    ts.map(t => UpdateTask(t.etype, t.eid, t.seq, t.src, TaskCodec.render(t.ops)))
+  }
+
   /** Same fold, no codec in the hot path: ops arrive typed. */
   def applyTypedTasks[T: Encoder](tasks: Dataset[TypedTask], now: Long)
                                  (project: (Long, Rec) => T): Dataset[T] = {
@@ -67,10 +75,10 @@ object EntityFold {
   }
 
   /** Incremental variant: cogroup new tasks with an existing snapshot and fold
-    * on top of the stored record — the `foreachBatch` body for streaming
-    * ingest. Entities with no tasks pass through unchanged; records whose fold
-    * ends in `!DELETE` are dropped (the reference's delete-on-event,
-    * `update_manager.py:640–647`).
+    * on top of the stored record — the pure reference that the
+    * merge-on-read store's per-key merge must equal. Entities with no tasks
+    * pass through unchanged; records whose fold ends in `!DELETE` are
+    * dropped (the reference's delete-on-event, `update_manager.py:640–647`).
     */
   def applyToSnapshot(snapshot: Dataset[EntityState], tasks: Dataset[UpdateTask],
                       now: Long): Dataset[EntityState] = {

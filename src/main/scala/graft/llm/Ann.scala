@@ -300,6 +300,27 @@ object Ann {
                            batchId: Long): Boolean =
     appendIvf(newVectors, indexDir, Some(batchId))
 
+  /** The frozen-quantizer argmax shared by [[appendToIvfIndex]] and
+    * [[Pq.appendToIvfAdcIndex]]: the cluster of the centroid in `cents`
+    * (an ascending-cluster array of `struct(cluster, centroid)`) with the
+    * highest 6-place cosine to `embedding`. The fold walks clusters
+    * ascending and displaces the incumbent only on a strictly greater
+    * cosine, which is the (ccos DESC, cluster ASC) order of a window: ties
+    * go to the lower cluster. Spark's `>` ranks NaN above every double and
+    * NaN > NaN is false, so a zero-norm embedding, whose every cosine is
+    * NaN, lands in the lowest cluster, searchable like any other row, not
+    * at the -1 sentinel. Needs `cosine_sim` registered
+    * ([[graft.GraftExtensions]]).
+    */
+  private[llm] def nearestCluster(embedding: Column, cents: Column): Column =
+    aggregate(cents,
+      struct(lit(Double.NegativeInfinity).as("ccos"), lit(-1L).as("cluster")),
+      (acc, c) => {
+        val d = round(call_function("cosine_sim", embedding, c.getField("centroid")), 6)
+        when(d > acc.getField("ccos"), struct(d.as("ccos"), c.getField("cluster").as("cluster")))
+          .otherwise(acc)
+      }).getField("cluster")
+
   private def appendIvf(newVectors: DataFrame, indexDir: String,
                         batchId: Option[Long]): Boolean = {
     val spark = newVectors.sparkSession
@@ -311,36 +332,16 @@ object Ann {
     // Frozen-quantizer argmax as ONE map-side projection (r15, guide
     // §2.3/§2.4): the |clusters|-row centroid table collapses to a single
     // cluster-sorted array row, and each batch row picks its best cluster
-    // in a per-row fold — zero exchange, zero sort. The previous shape
-    // (broadcast nested-loop × window row_number) shuffled AND sorted
-    // |batch|·|clusters| rows carrying the full embedding payload just to
-    // keep one row per vec_id. Tie-break identical by construction: the
-    // fold walks clusters ascending and only a STRICTLY greater ccos
-    // displaces the incumbent — max ccos, ties to the lower cluster, the
-    // exact (ccos DESC, cluster ASC) order of the old window.
+    // in a per-row fold ([[nearestCluster]]) — zero exchange, zero sort. The
+    // previous shape (broadcast nested-loop × window row_number) shuffled
+    // AND sorted |batch|·|clusters| rows carrying the full embedding
+    // payload just to keep one row per vec_id.
     val centsArr = cents.agg(sort_array(collect_list(struct(
       col("cluster").cast("long").as("cluster"), col("centroid")))).as("cents"))
     graft.GraftExtensions.register(spark)
     val assigned = e.join(broadcast(centsArr), lit(true))
-      .withColumn("best", aggregate(col("cents"),
-        struct(lit(Double.NegativeInfinity).as("ccos"), lit(-1L).as("cluster")),
-        (acc, c) => {
-          val d = round(call_function("cosine_sim",
-            col("embedding"), c.getField("centroid")), 6)
-          // displace iff strictly greater under "NaN is largest" — the old
-          // window's (ccos DESC, cluster ASC) order sorts NaN FIRST, so a
-          // zero-norm/NaN embedding (every cosine NaN) lands in the LOWEST
-          // cluster, searchable like any other row; a bare `d > acc` fold
-          // left it at the -1 sentinel in an unreadable partition (r15
-          // advice)
-          when((isnan(d) && !isnan(acc.getField("ccos"))) ||
-              (!isnan(d) && !isnan(acc.getField("ccos")) &&
-                d > acc.getField("ccos")),
-            struct(d.as("ccos"), c.getField("cluster").as("cluster")))
-            .otherwise(acc)
-        }))
       .select(col("vec_id"), col("embedding"),
-        col("best").getField("cluster").as("cluster"))
+        nearestCluster(col("embedding"), col("cents")).as("cluster"))
     // the ledger row-count rides the append as an observed metric — the
     // previous cache()+count() held the batch's payload in block storage
     // and ran a second action just to count what the write streamed anyway.

@@ -414,29 +414,15 @@ object Pq {
     // regroup for the codes, a vec_id join to marry the two, and a
     // cache()+count() for the ledger. Now: the centroid table and codebook
     // collapse to two 1-row broadcast arrays; each batch row folds over
-    // them for its cluster (max ccos, ties to the lower cluster — the old
-    // window's exact (ccos DESC, cluster ASC)) and codes ([[codesExpr]],
+    // them for its cluster ([[Ann.nearestCluster]]) and codes ([[codesExpr]],
     // assign()'s exact argmin/tie rule); geometry is read off the array
     // sizes; the ledger count rides the write as an observed metric.
     val centsArr = cents.agg(sort_array(collect_list(struct(
       col("cluster").cast("long").as("cluster"), col("centroid")))).as("cents"))
     val assigned = e.join(broadcast(centsArr), lit(true))
       .join(broadcast(codebookArray(cb)), lit(true))
-      .withColumn("best", aggregate(col("cents"),
-        struct(lit(Double.NegativeInfinity).as("ccos"), lit(-1L).as("cluster")),
-        (acc, c) => {
-          val d = round(call_function("cosine_sim",
-            col("embedding"), c.getField("centroid")), 6)
-          // NaN-is-largest displacement, same rationale and rule as
-          // [[Ann.appendIvf]]'s fold: a NaN-cosine row routes to the lowest
-          // cluster (the old window's order) instead of the -1 sentinel
-          when((isnan(d) && !isnan(acc.getField("ccos"))) ||
-              (!isnan(d) && !isnan(acc.getField("ccos")) &&
-                d > acc.getField("ccos")),
-            struct(d.as("ccos"), c.getField("cluster").as("cluster")))
-            .otherwise(acc)
-        }))
-      .select(col("vec_id"), col("best").getField("cluster").as("cluster"),
+      .select(col("vec_id"),
+        Ann.nearestCluster(col("embedding"), col("cents")).as("cluster"),
         codesExpr(col("cb"), col("embedding")).as("codes"))
     // clusterKeyed: one O(batch) exchange → one file per touched cluster
     // per append (guide §6; same rationale as [[Ann.appendIvf]])

@@ -5,19 +5,20 @@ import org.apache.spark.sql.SparkSession
 
 /** Batch-id replay protection for SIDE-INDEX appends driven from
   * `foreachBatch` — the missing half of exactly-once for the persisted
-  * ANN/LSH/boilerplate side-indexes, mirroring the commit discipline
-  * [[StreamIngest.TransactionalSnapshotStore]] gives the entity snapshot
-  * (reference contract: ack-after-processing redelivery,
+  * ANN/LSH/boilerplate side-indexes, mirroring the replay ledger
+  * [[StreamIngest.MergeOnReadSnapshotStore.applyBatchIdempotent]] gives the
+  * entity store (reference contract: ack-after-processing redelivery,
   * `update_manager.py:442–457`).
   *
   * Why it exists: `foreachBatch` is at-least-once. A driver crash between
   * a side-index append and the streaming checkpoint commit replays the
   * micro-batch, and a raw `.write.mode("append")` then double-counts a
   * boilerplate dictionary (over-scrubbing documents) and duplicates index
-  * rows (duplicate top-k candidates, inflated drift ledger). The snapshot
-  * store solves this by making the batch id the version id; a shared
-  * append-layout index can't version whole directories per batch, so this
-  * ledger makes the APPEND itself idempotent instead:
+  * rows (duplicate top-k candidates, inflated drift ledger). The entity
+  * store solves this by recording each committed batch id in the manifest
+  * of the version it wrote; a shared append-layout index has no per-batch
+  * version to carry that record, so this ledger makes the APPEND itself
+  * idempotent instead:
   *
   *  1. `ledgerDir/b<batchId>` marker present → the batch is already fully
   *     published; return without touching storage (metadata-only no-op).
@@ -58,8 +59,8 @@ object SideIndexLedger {
     fsFor(spark, ledgerDir).exists(new Path(s"$ledgerDir/b$batchId"))
 
   /** Number of committed batch markers (replay-dedup receipt: a replayed
-    * batch must NOT mint a new marker — same receipt shape as
-    * `TransactionalSnapshotStore.commitCount`). */
+    * batch must NOT mint a new marker — the side-index counterpart of
+    * `MergeOnReadSnapshotStore.committedBatchIds`). */
   def commitCount(spark: SparkSession, ledgerDir: String): Int = {
     val fs = fsFor(spark, ledgerDir)
     val p = new Path(ledgerDir)

@@ -6,11 +6,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.fold.{EntityFold, EntityState, UpdateTask}
 import graft.ingest.EventTasks
-import graft.ops.TaskCodec
 
 /** Structured-Streaming wrapper over the batch fold (SURVEY §2.13): the
   * reference's filer-watcher + RabbitMQ + worker pipeline collapses to
-  * `readStream → validate → foreachBatch(applyToSnapshot)`.
+  * `readStream → validate → foreachBatch(store.applyBatch)`.
   *
   *  - Source: file stream (the reference's `read_dir` maildir claim protocol,
   *    `warden_receiver.py:50–172`, is exactly what Spark's file source +
@@ -18,11 +17,13 @@ import graft.ops.TaskCodec
   *  - Late/future data: events older than `maxAgeDays` or more than 5 min in
   *    the future are rejected (`warden_receiver.py:444–457,510–517`); the
   *    watermark bounds any event-time state the same way.
-  *  - State: the entity snapshot is a versioned parquet table; each
-  *    micro-batch cogroups its tasks with the previous version and writes the
-  *    next (the exactly-once story is the file sink's atomic directory swap +
-  *    source checkpoint, mirroring the reference's ack-after-write,
-  *    `update_manager.py:452–457`).
+  *  - State: the entity records live in a [[MergeOnReadSnapshotStore]];
+  *    each micro-batch folds its tasks onto the records it touches and
+  *    writes them as one manifested version. The exactly-once story is
+  *    [[MergeOnReadSnapshotStore.applyBatchIdempotent]]: the manifest ledger
+  *    records each committed batch id, so a batch replayed from the source
+  *    checkpoint folds once, mirroring the reference's ack-after-write
+  *    (`update_manager.py:452–457`).
   */
 object StreamIngest {
 
@@ -60,48 +61,8 @@ object StreamIngest {
     def applyBatch(tasks: Dataset[UpdateTask], nowEpoch: Long): Unit
   }
 
-  /** Versioned parquet snapshot store: read the latest version, write the
-    * next — never overwrite the directory being read (Spark cannot
-    * read-modify-write one parquet path in a single job).
-    */
-  final class SnapshotStore(spark: SparkSession, root: String) extends EntityStore {
-    import spark.implicits._
-    // Hadoop FS, not java.io.File: the store root may be hdfs://, s3a://, or
-    // any other FileSystem scheme — local-only listing would silently report
-    // "no versions" there.
-    private def versions: Seq[Long] = {
-      val path = new org.apache.hadoop.fs.Path(root)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(path)) Seq.empty
-      else fs.listStatus(path).toSeq
-        .map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit) && n.length > 1)
-        .map(_.drop(1).toLong)
-        .sorted
-    }
-    def read(): Dataset[EntityState] = versions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$root/v$v").as[EntityState]
-      case None    => spark.emptyDataset[EntityState]
-    }
-    def write(ds: Dataset[EntityState]): Unit = {
-      val next = versions.lastOption.getOrElse(-1L) + 1
-      // Range-partition + sort by entity id: parquet min/max zone maps then
-      // prune subnet/range scans over the record table — the columnar
-      // restatement of the reference's int-IP index (SURVEY §4,
-      // core/mongodb.py:81-95). The per-batch shuffle is the standard
-      // layout-maintenance cost of a sorted store.
-      writeParquet(ds.repartitionByRange(col("eid")).sortWithinPartitions("eid"), s"$root/v$next")
-    }
-    override def applyBatch(tasks: Dataset[UpdateTask], nowEpoch: Long): Unit =
-      write(EntityFold.applyToSnapshot(read(), tasks, nowEpoch))
-  }
-
-  /** Parquet write shared by the stores: zstd pages, because the records
-    * are JSON text, which zstd shrinks far more than the snappy default.
-    */
-  private def writeParquet(ds: Dataset[_], path: String, partitionBy: String*): Unit =
-    ds.write.mode("overwrite").option("compression", "zstd")
-      .partitionBy(partitionBy: _*).parquet(path)
+  /** Reads and writes the merge-on-read manifests. */
+  private val manifestJson = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** One row of the merge-on-read store's merge exchange: a stored row
     * (`kind` 0, from version `version`; `json` null marks a tombstone) or a
@@ -222,18 +183,21 @@ object StreamIngest {
     private def readManifest(v: Long): Manifest =
       manifestCache.computeIfAbsent(v, _ => {
         val in = fs.open(manifestPath(v))
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+        val node = try manifestJson.readTree(in) finally in.close()
         import scala.jdk.CollectionConverters._
         def longs(field: String) = node.path(field).elements().asScala.map(_.asLong()).toSeq
         Manifest(longs("buckets").map(_.toInt), longs("batches"), node.path("base").asBoolean(false))
       })
 
     private def writeManifest(v: Long, m: Manifest): Unit = {
+      val node = manifestJson.createObjectNode()
+      val buckets = node.putArray("buckets")
+      m.buckets.sorted.foreach(b => buckets.add(b))
+      val batches = node.putArray("batches")
+      m.batches.sorted.foreach(b => batches.add(b))
+      node.put("base", m.base)
       val out = fs.create(manifestPath(v), true)
-      val json = s"""{"buckets":${m.buckets.sorted.mkString("[", ",", "]")},""" +
-        s""""batches":${m.batches.sorted.mkString("[", ",", "]")},"base":${m.base}}"""
-      try out.write(json.getBytes("UTF-8"))
+      try out.write(manifestJson.writeValueAsBytes(node))
       finally out.close()
     }
 
@@ -287,9 +251,14 @@ object StreamIngest {
         .sortWithinPartitions("bucket", "etype", "eid", "kind", "version")
         .mapPartitions(mergeRuns(_, now, base))
 
-    /** Write `rows` as version `v`: one file per bucket, key-sorted. */
+    /** Write `rows` as version `v`: one file per bucket, key-sorted, with
+      * zstd pages, because the records are JSON text, which zstd shrinks
+      * far more than the snappy default.
+      */
     private def writeVersion(rows: Dataset[StoredRow], v: Long): Unit =
-      writeParquet(rows.sortWithinPartitions("bucket", "etype", "eid"), s"$root/v$v", "bucket")
+      rows.sortWithinPartitions("bucket", "etype", "eid")
+        .write.mode("overwrite").option("compression", "zstd")
+        .partitionBy("bucket").parquet(s"$root/v$v")
 
     override def read(): Dataset[EntityState] = {
       val vs = live(versions)
@@ -302,9 +271,8 @@ object StreamIngest {
     override def applyBatch(tasks: Dataset[UpdateTask], nowEpoch: Long): Unit =
       applyInternal(tasks, nowEpoch, Seq.empty)
 
-    /** Exactly-once variant for streaming crash-replay (the MOR sibling of
-      * [[TransactionalSnapshotStore.applyBatch]]): a `batchId` already in
-      * the committed ledger returns without touching storage, so the replay
+    /** Exactly-once variant for streaming crash-replay: a `batchId` already
+      * in the committed ledger returns without touching storage, so the replay
       * of a batch that committed before the streaming checkpoint recorded
       * it cannot double-fold. The ledger rides the per-version manifest
       * (the store's existing commit point — a version is invisible until
@@ -374,12 +342,8 @@ object StreamIngest {
 
   /** One micro-batch: validate → derive tasks → fold onto the snapshot. */
   def runBatch(store: EntityStore, batch: DataFrame, nowEpoch: Long,
-               maxAgeDays: Int = 7): Unit = {
-    import batch.sparkSession.implicits._
-    val tasks = EventTasks.preAggregated(validate(batch, nowEpoch, maxAgeDays))
-      .map(t => UpdateTask(t.etype, t.eid, t.seq, t.src, TaskCodec.render(t.ops)))
-    store.applyBatch(tasks, nowEpoch)
-  }
+               maxAgeDays: Int = 7): Unit =
+    store.applyBatch(deriveBatchTasks(batch, nowEpoch, maxAgeDays), nowEpoch)
 
   /** Streaming-native stateful counters via `mapGroupsWithState` — the
     * `flatMapGroupsWithState` pattern SURVEY §2.13 maps NERD's per-entity
@@ -500,70 +464,17 @@ object StreamIngest {
     }
   }
 
-  /** Exactly-once snapshot store keyed by micro-batch id — the missing half
-    * of the crash-replay story. The plain [[SnapshotStore]] is append-only
-    * versioned, so a query that dies AFTER `applyBatch` committed but BEFORE
-    * the streaming checkpoint recorded the batch would re-fold that batch on
-    * restart and double every counter. Here the version id IS the batch id
-    * (`b<batchId>`, committed iff the parquet job's `_SUCCESS` marker
-    * exists), so replay of an already-committed batch is a metadata-only
-    * no-op and a crash mid-write is invisible (uncommitted dirs are ignored
-    * by `read()` and overwritten by the retry). This is the reference's
-    * ack-after-processing redelivery contract (`update_manager.py:442–457`)
-    * restated as idempotent-by-batch-id sink commits — the standard Spark
-    * transactional-foreachBatch discipline.
+  /** One micro-batch folded exactly once per `batchId`: validate → derive
+    * tasks → [[MergeOnReadSnapshotStore.applyBatchIdempotent]].
     */
-  final class TransactionalSnapshotStore(spark: SparkSession, root: String) {
-    import spark.implicits._
-    private def fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    private def committedBatches: Seq[Long] = {
-      val path = new org.apache.hadoop.fs.Path(root)
-      if (!fs.exists(path)) Seq.empty
-      else fs.listStatus(path).toSeq
-        .map(_.getPath.getName)
-        .filter(n => n.startsWith("b") && n.length > 1 && n.drop(1).forall(_.isDigit))
-        .filter(n => fs.exists(new org.apache.hadoop.fs.Path(s"$root/$n/_SUCCESS")))
-        .map(_.drop(1).toLong)
-        .sorted
-    }
-    def read(): Dataset[EntityState] = committedBatches.lastOption match {
-      case Some(b) => spark.read.parquet(s"$root/b$b").as[EntityState]
-      case None    => spark.emptyDataset[EntityState]
-    }
-    /** Number of committed batch versions (replay-dedup receipt: a replayed
-      * batch must NOT mint a new version). */
-    def commitCount: Int = committedBatches.size
-    /** Fold one micro-batch onto the snapshot, exactly once per `batchId`:
-      * a replayed id returns without touching storage. */
-    def applyBatch(tasks: Dataset[UpdateTask], nowEpoch: Long, batchId: Long): Unit = {
-      if (committedBatches.contains(batchId)) return // replay after commit
-      writeParquet(EntityFold.applyToSnapshot(read(), tasks, nowEpoch)
-        .repartitionByRange(col("eid")).sortWithinPartitions("eid"), s"$root/b$batchId")
-    }
-  }
-
-  /** One micro-batch through the transactional store: validate → derive
-    * tasks → fold, committed under the batch id (see
-    * [[TransactionalSnapshotStore.applyBatch]]).
-    */
-  def runBatchExactlyOnce(store: TransactionalSnapshotStore, batch: DataFrame,
-                          nowEpoch: Long, batchId: Long, maxAgeDays: Int = 7): Unit =
-    store.applyBatch(deriveBatchTasks(batch, nowEpoch, maxAgeDays), nowEpoch, batchId)
-
-  /** Same, against the merge-on-read store (the production shape: O(touched
-    * buckets) writes + the manifest-ledger replay dedup). */
   def runBatchExactlyOnce(store: MergeOnReadSnapshotStore, batch: DataFrame,
                           nowEpoch: Long, batchId: Long, maxAgeDays: Int): Unit =
     store.applyBatchIdempotent(deriveBatchTasks(batch, nowEpoch, maxAgeDays),
       nowEpoch, batchId)
 
   private def deriveBatchTasks(batch: DataFrame, nowEpoch: Long,
-                               maxAgeDays: Int): Dataset[UpdateTask] = {
-    import batch.sparkSession.implicits._
-    EventTasks.preAggregated(validate(batch, nowEpoch, maxAgeDays))
-      .map(t => UpdateTask(t.etype, t.eid, t.seq, t.src, TaskCodec.render(t.ops)))
-  }
+                               maxAgeDays: Int): Dataset[UpdateTask] =
+    EntityFold.wire(EventTasks.preAggregated(validate(batch, nowEpoch, maxAgeDays)))
 
   /** Two-lane source admission — the reference's bounded normal queue +
     * unbounded priority queue, priority consumed first
@@ -608,9 +519,11 @@ object StreamIngest {
     * TASKS for free; what it does not do by itself is resurrect a DRIVER
     * query whose micro-batch exhausted its task retries. This supervisor
     * rebuilds the query from its checkpoint after a failure, up to
-    * `maxRestarts` times — combined with [[TransactionalSnapshotStore]] the
-    * restarted query replays the failed batch exactly once. Returns the
-    * number of restarts consumed; rethrows once the budget is spent.
+    * `maxRestarts` times — combined with
+    * [[MergeOnReadSnapshotStore.applyBatchIdempotent]], whose manifest
+    * ledger skips a committed batch id, the restarted query replays the
+    * failed batch exactly once. Returns the number of restarts consumed;
+    * rethrows once the budget is spent.
     */
   def superviseRestarts(maxRestarts: Int)(mkQuery: () => StreamingQuery): Int = {
     var restarts = 0
@@ -665,22 +578,19 @@ object StreamIngest {
     *
     * Backpressure: the reference bounds inflow with RabbitMQ prefetch +
     * queue length; the Spark analog is source-side trigger admission —
-    * `maxFilesPerTrigger`/`maxBytesPerTrigger` cap what each micro-batch
-    * admits, so a backlog drains in bounded-size batches instead of one
-    * giant catch-up batch that overwhelms executor memory.
+    * `maxFilesPerTrigger` caps what each micro-batch admits, so a backlog
+    * drains in bounded-size batches instead of one giant catch-up batch
+    * that overwhelms executor memory.
     */
   def start(spark: SparkSession, sourceDir: String, store: EntityStore,
             checkpointDir: String, nowEpoch: () => Long,
             maxFilesPerTrigger: Option[Int] = None,
-            maxBytesPerTrigger: Option[Long] = None,
             maxAttempts: Int = 1,
             trigger: Option[org.apache.spark.sql.streaming.Trigger] = None): StreamingQuery = {
     val schema = spark.read.parquet(sourceDir).schema
     val reader0 = spark.readStream.schema(schema)
-    val reader1 = maxFilesPerTrigger.fold(reader0)(n =>
+    val reader = maxFilesPerTrigger.fold(reader0)(n =>
       reader0.option("maxFilesPerTrigger", n.toString))
-    val reader = maxBytesPerTrigger.fold(reader1)(n =>
-      reader1.option("maxBytesPerTrigger", n.toString))
     val writer = reader
       .parquet(sourceDir)
       .withWatermark("ts", "7 days")

@@ -1575,6 +1575,21 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/corpus").count() == 12L)
   }
 
+  test("IVF append routes a zero-norm vector to the lowest cluster, not the -1 sentinel") {
+    import spark.implicits._
+    import graft.llm.Ann
+    val dir = java.nio.file.Files.createTempDirectory("ivf-nan").toString + "/idx"
+    val emb = (0L until 12L).map(i =>
+      (i, Array(i.toDouble % 3, 1.0), i % 3 + 5)).toDF("vec_id", "embedding", "cluster")
+    Ann.writeIvfIndex(emb, "cluster", dir)
+    // every cosine of a zero-norm vector is NaN: NaN ranks largest, ties
+    // go to the lower cluster
+    Ann.appendToIvfIndex(Seq((100L, Array(0.0, 0.0))).toDF("vec_id", "embedding"), dir)
+    val got = spark.read.parquet(s"$dir/corpus").where($"vec_id" === 100L)
+      .select($"cluster").as[Long].collect().toSeq
+    assert(got == Seq(5L), s"zero-norm vector landed in $got")
+  }
+
   test("crash injection: IVFADC codes compaction heals through the shared swap discipline") {
     import spark.implicits._
     import graft.llm.Pq
@@ -1590,6 +1605,41 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(fs.exists(part) && !fs.exists(aside))
     assert(spark.read.parquet(s"$dir/codes").count() == 8L,
       "no coded vector may be lost across the heal")
+  }
+
+  test("IVFADC append routes a zero-norm vector to the lowest cluster, not the -1 sentinel") {
+    import spark.implicits._
+    import graft.llm.Pq
+    val dir = java.nio.file.Files.createTempDirectory("adc-nan").toString + "/idx"
+    val emb = (0L until 8L).map(i =>
+      (i, Array(i.toDouble, (i * i).toDouble), i % 2 + 5)).toDF("vec_id", "embedding", "cluster")
+    Pq.writeIvfAdcIndex(emb, "cluster", dir, m = 2, subDim = 1, k = 2)
+    Pq.appendToIvfAdcIndex(Seq((100L, Array(0.0, 0.0))).toDF("vec_id", "embedding"), dir)
+    val got = spark.read.parquet(s"$dir/codes").where($"vec_id" === 100L)
+      .select($"cluster").as[Long].collect().toSeq
+    assert(got == Seq(5L), s"zero-norm vector landed in $got")
+  }
+
+  test("IVFADC append refuses a codebook with a gap in a subspace's codes") {
+    import spark.implicits._
+    import graft.llm.Pq
+    val root = java.nio.file.Files.createTempDirectory("adc-gap").toString
+    val dir = root + "/idx"
+    // distinct values in both subspaces: every seed keeps its code
+    val emb = (0L until 12L).map(i =>
+      (i, Array(i.toDouble, (i * i).toDouble), i % 2)).toDF("vec_id", "embedding", "cluster")
+    Pq.writeIvfAdcIndex(emb, "cluster", dir, m = 2, subDim = 1, k = 3)
+    val cb = spark.read.parquet(s"$dir/codebooks")
+    assert(cb.count() == 6L, "test setup: the build lost a code")
+    // drop code 1 of 0..2 in sub 0; dropping only the last code would
+    // leave the codes contiguous, which decodes correctly
+    cb.where(!($"sub" === 0 && $"code" === 1)).write.parquet(s"$root/gap")
+    spark.read.parquet(s"$root/gap").write.mode("overwrite").parquet(s"$dir/codebooks")
+    val batch = Seq((100L, Array(1.0, 1.0))).toDF("vec_id", "embedding")
+    val err = intercept[Exception](Pq.appendToIvfAdcIndex(batch, dir))
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage))
+    assert(messages.exists(_.contains("not positionally decodable")), s"got $err")
   }
 
   test("crash injection: LSH compaction swap heals on read from the .old aside") {

@@ -40,14 +40,13 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("JSON wire-format fold path equals typed fold path") {
-    import graft.fold.{EntityFold, UpdateTask}
+    import graft.fold.EntityFold
     import graft.ingest.EventTasks
-    import graft.ops.TaskCodec
     import spark.implicits._
     val ev = graft.core.Tables.events(spark, sf)
     val now = 1706659200L
     val typed = EventTasks.preAggregated(ev)
-    val wire = typed.map(t => UpdateTask(t.etype, t.eid, t.seq, t.src, TaskCodec.render(t.ops)))
+    val wire = EntityFold.wire(typed)
     val a = EntityFold.applyTypedTasks(typed, now)(EventTasks.projectFolded)
       .toDF().orderBy($"entity").collect()
     val b = EntityFold.applyTasks(wire, now)(EventTasks.projectFolded)

@@ -10,9 +10,10 @@ import graft.streaming.SideIndexLedger
 /** Replay-injection coverage for the side-index batch-id ledger (r14 ask
   * #1): `foreachBatch` is at-least-once, so every persisted side-index
   * append must be a no-op when its micro-batch is redelivered — the same
-  * contract `nerd_stream_recovery` proves for the entity snapshot's
-  * TransactionalSnapshotStore, here proven for the LSH band index, the
-  * boilerplate dictionary, and the IVF/IVFADC corpus/codes layouts. Each
+  * contract `nerd_stream_recovery` proves for the entity store's
+  * manifest ledger (`MergeOnReadSnapshotStore.applyBatchIdempotent`),
+  * here proven for the LSH band index, the boilerplate dictionary, and
+  * the IVF/IVFADC corpus/codes layouts. Each
   * test runs a batch's side-effect TWICE with the same batchId and asserts
   * storage (row counts, dictionary counts, drift ledger) is unchanged;
   * the crash-injection tests re-run after deleting the commit marker

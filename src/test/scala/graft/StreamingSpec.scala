@@ -28,7 +28,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streamed micro-batches converge to the one-shot fold") {
     import spark.implicits._
-    import graft.fold.{EntityFold, EntityState, UpdateTask}
+    import graft.fold.{EntityFold, EntityState}
     import graft.ingest.EventTasks
     import graft.ops.TaskCodec
 
@@ -44,7 +44,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val stateDir = Files.createTempDirectory("graft-stream-state").toString
     val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
-    val store = new StreamIngest.SnapshotStore(spark, stateDir)
+    val store = new StreamIngest.MergeOnReadSnapshotStore(spark, stateDir, numBuckets = 8)
 
     val schema = spark.read.parquet(srcDir).schema
     val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
@@ -58,13 +58,13 @@ class StreamingSpec extends AnyFunSuite {
       .start()
     q.processAllAvailable()
     q.stop()
+    // two batches: the second folds onto records the first one wrote
+    assert(store.versionCount == 2)
 
     val streamed = store.read().map(s => (s.eid, s.json)).collect().sortBy(_._1)
     val oneShot = EntityFold
       .applyToSnapshot(spark.emptyDataset[EntityState],
-        EventTasks.preAggregated(ev)
-          .map(t => UpdateTask(t.etype, t.eid, t.seq, t.src, TaskCodec.render(t.ops))),
-        now)
+        EntityFold.wire(EventTasks.preAggregated(ev)), now)
       .map(s => (s.eid, s.json)).collect().sortBy(_._1)
     assert(streamed.length == oneShot.length && streamed.length > 0)
     // Records must be identical field-by-field (JSON key order is stable:
@@ -159,14 +159,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(recs.values.forall(_("n") == 1L))
   }
 
-  test("random batches: merge-on-read and full-rewrite stores stay equal") {
+  test("random batches: merge-on-read store equals the chained pure fold") {
     import spark.implicits._
-    import graft.fold.UpdateTask
+    import graft.fold.{EntityFold, EntityState, UpdateTask}
     import graft.ops.TaskCodec
 
     val r = new scala.util.Random(7)
-    val full = new StreamIngest.SnapshotStore(
-      spark, Files.createTempDirectory("graft-eq-full").toString)
+    var folded = spark.emptyDataset[EntityState]
     val mor = new StreamIngest.MergeOnReadSnapshotStore(
       spark, Files.createTempDirectory("graft-eq-mor").toString,
       numBuckets = 8, maxDeltas = 2)
@@ -180,37 +179,13 @@ class StreamingSpec extends AnyFunSuite {
         }
         UpdateTask("ip", r.nextInt(30).toLong, b * 1000L + i, "t", op)
       }
-      full.applyBatch(tasks.toDS(), 1000L + b)
+      folded = EntityFold.applyToSnapshot(folded, tasks.toDS(), 1000L + b)
       mor.applyBatch(tasks.toDS(), 1000L + b)
     }
-    val a = full.read().collect().map(s => s.eid -> TaskCodec.parseRec(s.json)).toMap
+    val a = folded.collect().map(s => s.eid -> TaskCodec.parseRec(s.json)).toMap
     val c = mor.read().collect().map(s => s.eid -> TaskCodec.parseRec(s.json)).toMap
     assert(a.keySet == c.keySet && a.nonEmpty)
     a.keySet.foreach(eid => assert(a(eid) == c(eid), s"entity $eid diverged"))
-  }
-
-  test("merge-on-read store converges with the full-rewrite store on real batches") {
-    import spark.implicits._
-    import graft.ops.TaskCodec
-
-    val ev = graft.core.Tables.events(spark, sf)
-    val now = ev.agg(max(unix_timestamp(col("ts")))).head.getLong(0) + 60
-    val cut = ev.agg(max(col("event_id"))).head.getLong(0) / 2
-    val full = new StreamIngest.SnapshotStore(
-      spark, Files.createTempDirectory("graft-mor-full").toString)
-    val mor = new StreamIngest.MergeOnReadSnapshotStore(
-      spark, Files.createTempDirectory("graft-mor-delta").toString, numBuckets = 8)
-    for (store <- Seq[StreamIngest.EntityStore](full, mor)) {
-      StreamIngest.runBatch(store, ev.filter(col("event_id") <= cut), now, maxAgeDays = 10000)
-      StreamIngest.runBatch(store, ev.filter(col("event_id") > cut), now, maxAgeDays = 10000)
-    }
-    val a = full.read().map(s => (s.eid, s.json)).collect().sortBy(_._1)
-    val b = mor.read().map(s => (s.eid, s.json)).collect().sortBy(_._1)
-    assert(a.length == b.length && a.length > 0)
-    a.zip(b).foreach { case ((id1, j1), (id2, j2)) =>
-      assert(id1 == id2)
-      assert(TaskCodec.parseRec(j1) == TaskCodec.parseRec(j2), s"entity $id1 diverged")
-    }
   }
 
   test("mapGroupsWithState counters accumulate across micro-batches") {
@@ -370,7 +345,7 @@ class StreamingSpec extends AnyFunSuite {
     val srcDir = Files.createTempDirectory("graft-start-src").toString
     ev.coalesce(1).write.mode("append").parquet(srcDir)
     val stateDir = Files.createTempDirectory("graft-start-state").toString
-    val store = new StreamIngest.SnapshotStore(spark, stateDir)
+    val store = new StreamIngest.MergeOnReadSnapshotStore(spark, stateDir, numBuckets = 8)
     val q = StreamIngest.start(spark, srcDir, store,
       Files.createTempDirectory("graft-start-ckpt").toString, () => now)
     q.processAllAvailable()
@@ -548,28 +523,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.map(_._3).sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L, 100L, 101L, 102L))
   }
 
-  test("transactional store: a replayed batch id is a committed no-op") {
-    import spark.implicits._
-    import graft.fold.UpdateTask
-    val root = Files.createTempDirectory("graft-txn-store").toString
-    val store = new StreamIngest.TransactionalSnapshotStore(spark, root)
-    def task(eid: Long) = UpdateTask("ip", eid, eid, "t",
-      """[["add","total",1]]""")
-    store.applyBatch(Seq(task(1), task(2)).toDS(), nowEpoch = 1000L, batchId = 0)
-    assert(store.commitCount == 1)
-    val after0 = store.read().collect().map(s => s.eid -> s.json).toMap
-    // crash-replay of batch 0: same id, must not re-fold or mint a version
-    store.applyBatch(Seq(task(1), task(2)).toDS(), nowEpoch = 1000L, batchId = 0)
-    assert(store.commitCount == 1)
-    assert(store.read().collect().map(s => s.eid -> s.json).toMap == after0)
-    // a NEW batch id folds on top as usual
-    store.applyBatch(Seq(task(1)).toDS(), nowEpoch = 1000L, batchId = 1)
-    assert(store.commitCount == 2)
-    val rec1 = graft.ops.TaskCodec.parseRec(store.read().collect()
-      .find(_.eid == 1L).get.json)
-    assert(rec1("total").toString == "2") // folded once per distinct batch id
-  }
-
   test("merge-on-read replay ledger: idempotent folds, ledger survives compaction") {
     import spark.implicits._
     import graft.fold.UpdateTask
@@ -696,8 +649,8 @@ class StreamingSpec extends AnyFunSuite {
     val src = Files.createTempDirectory("graft-recov-src").toString
     Seq(0L, 1L, 2L).foreach(g =>
       ev.filter(col("event_id") % 3 === g).coalesce(1).write.mode("append").parquet(src))
-    val store = new StreamIngest.TransactionalSnapshotStore(
-      spark, Files.createTempDirectory("graft-recov-store").toString)
+    val store = new StreamIngest.MergeOnReadSnapshotStore(
+      spark, Files.createTempDirectory("graft-recov-store").toString, numBuckets = 8)
     val ck = Files.createTempDirectory("graft-recov-ck").toString
     val marker = Files.createTempDirectory("graft-recov-flag").resolve("failed")
     val schema = ev.schema
@@ -715,13 +668,14 @@ class StreamingSpec extends AnyFunSuite {
         .start()
     }
     assert(restarts == 1)
-    assert(store.commitCount == 3) // one commit per batch, replay minted none
+    // one ledger entry per batch; the replay of batch 1 minted no version
+    assert(store.committedBatchIds == Set(0L, 1L, 2L) && store.versionCount == 3)
     // final state equals the one-shot fold: the crash was invisible.
     // Compare the PROJECTED record (conns rounded, like the oracle row): the
     // double `conns` sums accumulate in batch-split order, so the raw values
     // differ from the one-shot fold by float-addition reassociation — the
     // rounding at the query edge is exactly where that is absorbed.
-    import graft.fold.{EntityFold, EntityState, UpdateTask}
+    import graft.fold.{EntityFold, EntityState}
     import graft.ingest.EventTasks
     import graft.ops.TaskCodec
     def projected(states: Array[EntityState]) = states.map { s =>
@@ -729,10 +683,7 @@ class StreamingSpec extends AnyFunSuite {
       f.copy(conns = math.round(f.conns * 100).toDouble / 100)
     }.sortBy(_.entity).toSeq
     val oneShot = projected(EntityFold.applyToSnapshot(spark.emptyDataset[EntityState],
-        EventTasks.preAggregated(ev)
-          .map(t => UpdateTask(t.etype, t.eid, t.seq, t.src, TaskCodec.render(t.ops))),
-        now)
-      .collect())
+        EntityFold.wire(EventTasks.preAggregated(ev)), now).collect())
     val streamed = projected(store.read().collect())
     assert(streamed.nonEmpty && streamed == oneShot)
   }
