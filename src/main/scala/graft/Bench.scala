@@ -1,4 +1,6 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -57,39 +59,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The default 100-entry codegen class cache thrashes across a 60-query
-      // suite: the warmup pass's compiled classes are evicted before the
-      // timed pass, so wide-aggregate queries (64-column MinHash/SimHash)
-      // pay multi-second Janino recompiles in the measurement. Size the
-      // cache to the suite.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Single-file tables split by byte range: the default 128 MB split
-      // leaves a 64 MB 100x-scale table on ONE core of 32. 8 MB keeps base-SF
-      // plans identical (every sf0.1 file is smaller than 8 MB -> still one
-      // split) while a scaled corpus fans out across the executor. The open
-      // cost must scale WITH the split size (default 4 MB was tuned for
-      // 128 MB bins): left at 4 MB, an 8 MB bin packs only TWO small files,
-      // shattering every multi-file scratch store into tiny tasks — measured
-      // as a broad 1.3–1.8x suite slowdown. 256 KB keeps the default's 32:1
-      // bin:open-cost ratio.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "262144"))
-      // pinned for WardenFilter's shared from_json (see Verify.scala)
-      .config("spark.sql.json.enablePartialResults", "true")
-      // native graft expressions (cosine_sim) via the declarative hook; the
-      // operators also self-register imperatively on foreign sessions
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.kryo.registrator", "graft.GraftKryoRegistrator")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // SPARK_GRAFT_ONLY=name1,name2 restricts the run (local iteration aid).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -137,9 +107,6 @@ object Bench {
       n -> runOne(n, f)
     }
     val anchorsPost = anchors.map { case (n, f) => System.gc(); n -> runOne(n, f) }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     // a FAILED anchor run returns its time-to-failure, which would silently
     // corrupt every anchor-normalized number — if anchor_cpu failed in the
@@ -148,38 +115,52 @@ object Bench {
     val anchorOk = !failed.contains("anchor_cpu")
     val cpuMean = (anchorsPre ++ anchorsPost).filter(_._1 == "anchor_cpu")
       .map(_._2).sum / 2d
-    val anchorJson = (anchorsPre.map { case (k, v) => "\"" + k + "_pre\":" + v } ++
-      anchorsPost.map { case (k, v) => "\"" + k + "_post\":" + v } ++
-      Seq("\"anchor_cpu_mean\":" + (if (anchorOk) cpuMean.toString else "null")))
-      .mkString("{", ",", "}")
+    val json = new ObjectMapper()
+    def putMean(o: ObjectNode): ObjectNode =
+      if (anchorOk) o.put("anchor_cpu_mean", cpuMean) else o.putNull("anchor_cpu_mean")
+    def perQuery(f: (String, Double) => Double): ObjectNode = {
+      val o = json.createObjectNode()
+      results.foreach { case (k, v) => o.put(k, f(k, v)) }
+      o
+    }
+    def summary(): ObjectNode =
+      json.createObjectNode().put("metric", "total").put("unit", "sec").put("sf", sfDir)
+    val anchorJson = json.createObjectNode()
+    anchorsPre.foreach { case (k, v) => anchorJson.put(k + "_pre", v) }
+    anchorsPost.foreach { case (k, v) => anchorJson.put(k + "_post", v) }
+    putMean(anchorJson)
+    val qs = perQuery((_, v) => v)
+    val errs = json.createArrayNode()
+    failed.foreach(n => errs.add(n))
+    def full(normFields: ObjectNode => Unit): String = {
+      val o = summary().put("gc_between_queries", true)
+        .set[ObjectNode]("anchors", anchorJson).set[ObjectNode]("queries", qs)
+      normFields(o)
+      json.writeValueAsString(o.set[ObjectNode]("errors", errs).put("value", total))
+    }
     // stdout is captured tail-first downstream (last ~2000 chars survive), so
     // the headline value/errors go LAST on the line; the full per-query map
     // is also written to a file next to the run for durable inspection.
     // gc_between_queries: totals exclude cross-query GC pauses (System.gc()
     // before each timed region) — only compare against runs of this harness
-    val line = s"""{"metric":"total","unit":"sec","sf":"$sfDir","gc_between_queries":true,"anchors":$anchorJson,"queries":$qs,"errors":$errs,"value":$total}"""
-    println(line)
+    println(full(_ => ()))
     // the detail file additionally carries the anchor-normalized map —
     // cross-round comparisons should be made on THESE numbers, not seconds
-    val qsNormField =
-      if (!anchorOk) ""
-      else {
-        val qsNorm = results.map { case (k, v) =>
-          "\"" + k + "\":" + (math.round(v / cpuMean * 1000d) / 1000d) }
-          .mkString("{", ",", "}")
+    val detail = full { o =>
+      if (anchorOk) {
+        def r3(x: Double): Double = math.round(x * 1000d) / 1000d
         // segment-local normalization: divide by the nearest-in-time anchor
         // instead of the run mean, so mid-run box drift divides out of the
         // queries it actually hit
-        val segArr = segAnchors.map(v => math.round(v * 1000d) / 1000d)
-          .mkString("[", ",", "]")
-        val qsNormLocal = results.map { case (k, v) =>
-          val a = segAnchors(segOf(k))
-          "\"" + k + "\":" + (math.round(v / math.max(a, 1e-9) * 1000d) / 1000d) }
-          .mkString("{", ",", "}")
-        s""""queries_norm_cpu":$qsNorm,"anchor_cpu_segments":$segArr,""" +
-          s""""anchor_every":$anchorEvery,"queries_norm_cpu_local":$qsNormLocal,"""
+        val segArr = json.createArrayNode()
+        segAnchors.foreach(v => segArr.add(r3(v)))
+        o.set[ObjectNode]("queries_norm_cpu", perQuery((_, v) => r3(v / cpuMean)))
+          .set[ObjectNode]("anchor_cpu_segments", segArr)
+          .put("anchor_every", anchorEvery)
+          .set[ObjectNode]("queries_norm_cpu_local",
+            perQuery((k, v) => r3(v / math.max(segAnchors(segOf(k)), 1e-9))))
       }
-    val detail = s"""{"metric":"total","unit":"sec","sf":"$sfDir","gc_between_queries":true,"anchors":$anchorJson,"queries":$qs,$qsNormField"errors":$errs,"value":$total}"""
+    }
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_DETAIL.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), detail + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
@@ -191,7 +172,8 @@ object Bench {
     // to the detail file, is a few hundred bytes at any suite size, and is
     // printed LAST so a tail capture always ends with one complete,
     // parseable JSON object. The timed loop and the full line are untouched.
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},"anchor_cpu_mean":${if (anchorOk) cpuMean.toString else "null"},"detail":"$out","errors":$errs,"value":$total}""")
+    val last = putMean(summary().put("n_queries", results.size)).put("detail", out)
+    println(json.writeValueAsString(last.set[ObjectNode]("errors", errs).put("value", total)))
     spark.stop()
   }
 }

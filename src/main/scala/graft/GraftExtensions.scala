@@ -8,15 +8,11 @@ import graft.functions.{BpeBroadcasts, BpeTokenCount, ChunkFps, CosineSim, Disti
 
 /** The library's `SparkSessionExtensions` hook — the supported way to make
   * graft's native expressions visible to SQL and `call_function` on any
-  * session:
+  * session. [[GraftSession.local]], the in-repo session, wires it with:
   *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
-  * }}}
+  * {{{ .config("spark.sql.extensions", "graft.GraftExtensions") }}}
   *
-  * For sessions the caller does not build (notebooks, test harnesses),
+  * For sessions the caller does not build (notebooks, foreign applications),
   * [[GraftExtensions.register]] performs the same registration imperatively
   * and is idempotent — the operator code calls it before `call_function`, so
   * either path works.

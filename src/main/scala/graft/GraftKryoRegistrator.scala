@@ -13,7 +13,8 @@ import graft.ops.UpdateAlgebra._
   * CLASS NAME of every op, wrapper, and collection per record — at 10x-scale
   * ingest that is most of the shuffle bytes and a large share of the
   * serialize CPU. Registering the closed set of classes replaces each name
-  * with a varint id. Wire this with:
+  * with a varint id. [[GraftSession.local]], the in-repo session, wires it
+  * with:
   *
   * {{{ .config("spark.kryo.registrator", "graft.GraftKryoRegistrator") }}}
   *

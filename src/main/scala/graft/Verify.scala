@@ -1,33 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // see Bench.scala
-      // byte-range splits sized so scaled single-file tables fan out across
-      // the executor; open cost scaled with the split size (see Bench.scala)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "262144"))
-      // pinned: WardenFilter's shared from_json relies on partial-result
-      // conversion to confine per-row schema conflicts to the conflicting
-      // subtree (default true on Spark 4.x; pinned so behavior cannot
-      // silently change under us — see WardenFilter.apply)
-      .config("spark.sql.json.enablePartialResults", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.kryo.registrator", "graft.GraftKryoRegistrator")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=name1,name2 restricts the dump (local iteration aid,
     // same contract as Bench); the driver never sets it.
@@ -41,22 +20,12 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
+    val json = new ObjectMapper()
+    val oracle = json.createObjectNode()
+    SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+      .foreach { case (k, v) => oracle.put(k, v) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json.writeValueAsString(oracle))
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for a set of declared queries to text files
   * — the optimization rounds' plan-shape receipts (`plans/r<N>/<q>_<tag>.txt`).
@@ -17,22 +16,7 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <tag> <q1,q2,...|all>")
     val (outDir, tag) = (args(0), args(1))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "262144"))
-      .config("spark.sql.json.enablePartialResults", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.kryo.registrator", "graft.GraftKryoRegistrator")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val wanted = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet
     val qs = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted.contains("all") || wanted.contains(n) }

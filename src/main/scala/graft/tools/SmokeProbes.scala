@@ -163,7 +163,6 @@ object SmokeProbes {
     */
   def ivfDrift(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") % 5 < 3)
     val idx = java.nio.file.Files.createTempDirectory("graft-ivfdrift")
@@ -239,7 +238,6 @@ object SmokeProbes {
     */
   def ivfShift(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") % 5 < 3)
     val shifted = emb.filter(col("vec_id") % 5 >= 3)
@@ -329,7 +327,6 @@ object SmokeProbes {
     */
   def adcShift(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") % 5 < 3)
     val shifted = emb.filter(col("vec_id") % 5 >= 3)
@@ -566,16 +563,7 @@ object SmokeProbes {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.kryo.registrator", "graft.GraftKryoRegistrator")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // SPARK_GRAFT_PROBES=name1,name2 restricts the run (so a new probe can
     // be measured without re-running the whole battery); default = all.
     val all = Seq[(String, () => String)](

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Per-trigger cost decomposition for the structured-streaming queries
@@ -30,20 +29,7 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "262144"))
-      .config("spark.sql.json.enablePartialResults", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.kryo.registrator", "graft.GraftKryoRegistrator")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
 
     val defaults = Seq("llm_stream_near_dedup", "nerd_stream_recovery",
       "llm_stream_ann_ingest", "nerd_stream_counters", "llm_stream_dedup",

@@ -13,12 +13,7 @@ import graft.llm.{Bpe, Retrieval, Sketch}
   */
 class BpeSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   /** Reference BPE encode: split to chars per word, then repeatedly merge
     * the single leftmost occurrence of the merge pair until none remains —

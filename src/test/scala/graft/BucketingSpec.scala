@@ -15,36 +15,18 @@ import org.scalatest.funsuite.AnyFunSuite
 class BucketingSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   test("entity-bucketed tables sort-merge join with zero exchange") {
     val snap = graft.derive.Derive.snapshot(
         graft.core.Tables.events(spark, sf), "2024-01-29")
       .select(col("entity"), col("rep"), col("total30"))
+    // external tables in fresh directories: nothing depends on the
+    // session's warehouse location or on what an earlier run left there
     def save(name: String): Unit = {
-      // the session race decides which suite's warehouse config wins, and a
-      // killed JVM leaves table DIRECTORIES behind with no catalog entry —
-      // overwrite can't replace a location the catalog doesn't own, so clear
-      // both the entry and any stale location before writing
       spark.sql(s"DROP TABLE IF EXISTS $name")
-      val loc = new java.io.File(
-        new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, name)
-      def rm(f: java.io.File): Unit = {
-        // listFiles() is null on I/O error — don't turn a cleanup hiccup
-        // into an NPE that pre-empts the actual assertion
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(); ()
-      }
-      if (loc.exists()) rm(loc)
-      snap.write.bucketBy(8, "entity").sortBy("entity")
-        .mode("overwrite").format("parquet").saveAsTable(name)
+      snap.write.bucketBy(8, "entity").sortBy("entity").mode("overwrite").format("parquet")
+        .option("path", Files.createTempDirectory(name).toString).saveAsTable(name)
     }
     save("graft_bl_a")
     save("graft_bl_b")

@@ -67,9 +67,7 @@ class EdgeCodecSpec extends AnyFunSuite {
   }
 
   test("bulk endpoint end-to-end: binary IPs in, ordered packed reps out") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
+    val spark = GraftSession.local(4)
     import spark.implicits._
     val snapshot = Seq((10L, 0.25), (20L, 0.5)).toDF("entity", "rep")
     // request: 20, 99 (unknown), 10 — response order must follow the request

@@ -13,12 +13,7 @@ import graft.sources.{EnrichmentSource, Intel, PtrSource, ShodanSource}
   */
 class EnrichmentSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   private def ips: DataFrame = {
     import spark.implicits._

@@ -13,12 +13,7 @@ import graft.sinks.Exports
 class ExportsSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   private def today(): String =
     graft.core.Tables.events(spark, sf).agg(max(to_date(col("ts")))).head.getDate(0).toString

@@ -12,11 +12,7 @@ import graft.derive.Fmp.{Leaf, Split}
   */
 class FmpSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   private val tree = Split("a", 5, Leaf(0.25), Split("b", 0, Leaf(-0.5), Leaf(0.0625)))
 

@@ -12,12 +12,7 @@ import graft.functions.Funcs
   */
 class FuncsSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   test("ipstr2int(int2ipstr(x)) == x across the 32-bit range (property)") {
     import spark.implicits._
@@ -67,7 +62,6 @@ class FuncsSpec extends AnyFunSuite {
   test("latest_k equals sort+slice on random data, including duplicates and k > n (property)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{call_function, collect_list, lit, slice, sort_array}
-    graft.GraftExtensions.register(spark)
     // values drawn from a SMALL domain so boundary duplicates are common —
     // the case where a wrong tie-break would diverge from sort+slice
     val rows = Gen.listOfN(400, Gen.zip(Gen.chooseNum(0, 7), Gen.chooseNum(0L, 50L)))
@@ -123,5 +117,18 @@ class FuncsSpec extends AnyFunSuite {
     val buf = Array(1.25, -0.0, Double.MaxValue, 1e-300)
     assert(agg.deserialize(agg.serialize(buf)).toSeq == buf.toSeq)
     assert(agg.deserialize(agg.serialize(Array.emptyDoubleArray)).isEmpty)
+  }
+
+  test("spark.sql.extensions alone makes every native function visible; register stays idempotent") {
+    // a fresh session builds its function registry from the injected
+    // extensions only: nothing registered imperatively on `spark` reaches it
+    val fresh = spark.newSession()
+    GraftExtensions.functions.foreach { case (id, _, _) =>
+      assert(fresh.catalog.functionExists(id.funcName), s"${id.funcName} not injected")
+    }
+    GraftExtensions.register(fresh)
+    GraftExtensions.register(fresh)
+    val cos = fresh.sql("SELECT cosine_sim(array(3.0D, 4.0D), array(4.0D, 3.0D))").head().getDouble(0)
+    assert(math.abs(cos - 0.96) < 1e-12)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.query.AsOf
@@ -12,16 +11,9 @@ import graft.streaming.StreamIngest
 /** Unit coverage for the threat-intel receivers, as-of join, and timestamp
   * validation added in round 4.
   */
-class IntelSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IntelSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   test("asOfJoin assigns the last boundary with start <= key") {
     import spark.implicits._

@@ -11,12 +11,7 @@ import graft.llm.{Dedup, TextStats}
   */
 class LlmOpsSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   test("boilerplateScrub drops corpus-frequent chunks, keeps order, preserves membership") {
     import spark.implicits._
@@ -670,7 +665,6 @@ class LlmOpsSpec extends AnyFunSuite {
   test("native codegen cosine is bit-identical to the HOF fold") {
     import org.apache.spark.sql.functions._
     import graft.llm.Ann
-    graft.GraftExtensions.register(spark)
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .withColumn("embedding", col("embedding").cast("array<double>"))
     val self = e.limit(200).select(col("vec_id"),
@@ -690,7 +684,6 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("native distinct_ngrams matches the Column array_distinct formulation") {
     import org.apache.spark.sql.functions._
-    graft.GraftExtensions.register(spark)
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
     val grams = expr(
@@ -958,7 +951,6 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("bloom sizing formula hits the requested fpp within tolerance") {
     import spark.implicits._
-    graft.GraftExtensions.register(spark)
     import org.apache.spark.sql.functions._
     val n = 5000L
     val fpp = 0.05
@@ -1071,7 +1063,6 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("native ngram_spans is byte-identical to the HOF concat_ws pipeline") {
     import org.apache.spark.sql.functions.{call_function, col, expr, lit}
-    graft.GraftExtensions.register(spark)
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(org.apache.spark.sql.functions.split(col("text"), " ").as("w"))
       .filter(org.apache.spark.sql.functions.size(col("w")) >= 3)
@@ -1086,7 +1077,6 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("native chunk_fps is bit-identical to the HOF transform/aggregate pipeline") {
     import org.apache.spark.sql.functions.{call_function, col, expr, lit}
-    graft.GraftExtensions.register(spark)
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(org.apache.spark.sql.functions.split(col("text"), " ").as("toks"))
       .filter(org.apache.spark.sql.functions.size(col("toks")) >= 32)
@@ -1103,7 +1093,6 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("native span_digests is bit-identical to the HOF md5 pipeline") {
     import org.apache.spark.sql.functions.{call_function, col, expr, lit}
-    graft.GraftExtensions.register(spark)
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(org.apache.spark.sql.functions.split(col("text"), " ").as("w"))
       .filter(org.apache.spark.sql.functions.size(col("w")) >= 10)
@@ -1307,7 +1296,6 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("native l2_dist is bit-identical to the HOF sqrt-of-fold pipeline") {
     import org.apache.spark.sql.functions.col
-    graft.GraftExtensions.register(spark)
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .withColumn("embedding", col("embedding").cast("array<double>"))
     val a = emb.select(col("vec_id"), col("embedding").as("ea"))

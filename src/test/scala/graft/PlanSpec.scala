@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString

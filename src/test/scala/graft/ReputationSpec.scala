@@ -13,12 +13,7 @@ import graft.derive.Reputation.RepSource
   */
 class ReputationSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   private val today = "2024-01-10"
 

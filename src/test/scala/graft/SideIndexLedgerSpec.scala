@@ -23,12 +23,7 @@ import graft.streaming.SideIndexLedger
   */
 class SideIndexLedgerSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toString

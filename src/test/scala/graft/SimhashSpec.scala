@@ -11,12 +11,7 @@ import graft.llm.Simhash
   */
 class SimhashSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   /** Doc fixture: near-duplicate families (shared long prefix, tiny suffix
     * edits) plus unrelated singletons — the suffix edits flip only a few

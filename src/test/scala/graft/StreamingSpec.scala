@@ -15,16 +15,14 @@ import graft.streaming.StreamIngest
 class StreamingSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  private lazy val spark: SparkSession = {
+    val s = GraftSession.local(4)
     // the watermarked day-window test needs the trailing no-data micro-batch
     // to flush append-mode windows closed by the final batch's watermark;
     // pin the behavior rather than rely on the default staying true
-    .config("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    .getOrCreate()
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    s
+  }
 
   test("streamed micro-batches converge to the one-shot fold") {
     import spark.implicits._

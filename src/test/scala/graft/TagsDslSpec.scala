@@ -24,11 +24,7 @@ class TagsDslSpec extends AnyFunSuite {
                 nstr: String, arr: Seq[String], earr: Seq[String], b: Boolean): R =
     TagsDslTestRecord(num, zero, fnum, s, empty_s, nstr, arr, earr, b)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   private lazy val df = {
     import spark.implicits._

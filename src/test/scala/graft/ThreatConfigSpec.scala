@@ -18,11 +18,7 @@ case class ClsEvent(ip_info: String, description: String,
   */
 class ThreatConfigSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   // A faithful subset of the reference config (same categories, same
   // trigger lines, same yml shape incl. comments and block scalars).

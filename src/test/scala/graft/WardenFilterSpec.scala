@@ -13,12 +13,7 @@ import graft.ingest.WardenFilter
   */
 class WardenFilterSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   private def mk(rows: (Long, String)*) = {
     import spark.implicits._
