@@ -50,7 +50,7 @@ object Bench {
     // a couple of waves, so the anchor measures the box's aggregate
     // scan+decode throughput, not one task's latency. Bytes are pinned —
     // the same file, every sweep, every round.
-    val l = spark.read.parquet(s"$dir/lineitem.parquet")
+    val l = graft.core.Tables.lineitem(spark, dir)
     val wide = xxhash64(l.columns.map(col): _*)
     (0 until 32)
       .map(i => l.select(xxhash64(wide, lit(i)).as("h")).agg(expr("bit_xor(h)").as("x")))

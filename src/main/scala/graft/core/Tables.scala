@@ -11,7 +11,14 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    spark.read.parquet(s"${globEscaped(sfDir)}/$name.parquet")
+
+  /** `dir` with Hadoop's glob characters escaped: the parquet reader expands
+    * every load path as a glob, so a data dir whose name holds `\`, `[`,
+    * `{`, `*` or `?` would otherwise match nothing (`PATH_NOT_FOUND`).
+    */
+  private def globEscaped(dir: String): String =
+    dir.flatMap(c => if ("\\[{*?".indexOf(c) >= 0) s"\\$c" else c.toString)
 
   /** Adaptive scan parallelism for the CPU-heavy document/embedding pipelines:
     * a 100 TB table arrives as thousands of input splits and needs no help,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Artifacts
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
   *
@@ -137,19 +139,15 @@ object Ann {
     * partitions (the ENTIRE corpus, 2× write amplification) inside every
     * lifecycle query, and at production scale a thousand-split build would
     * fragment past any `maxFilesPerCluster` immediately. One O(input)
-    * exchange buys exactly `filesPerCluster` files per cluster. The salt is
-    * derived from vec_id (xxhash64 — never rand(): retried map tasks must
-    * reproduce the same placement, SPARK-38388); `filesPerCluster` is
-    * scale-parameterised (env `SPARK_GRAFT_INDEX_FILES_PER_CLUSTER`,
-    * default 1 — right for any cluster whose bytes fit one healthy parquet
-    * file; at 100 TB size it to ~cluster_bytes / 512 MB so single-cluster
-    * write tasks stay bounded).
+    * exchange hash-partitioned on the cluster alone buys exactly one file
+    * per cluster — right for any cluster whose bytes fit one healthy parquet
+    * file. A cluster too big for one write task needs a per-cluster file
+    * count derived from its observed bytes (a deterministic salt such as
+    * `pmod(xxhash64(vec_id), f)` — never rand(): retried map tasks must
+    * reproduce the same placement, SPARK-38388).
     */
-  private[llm] def clusterKeyed(df: DataFrame): DataFrame = {
-    val f = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_INDEX_FILES_PER_CLUSTER", "1").toInt)
-    df.repartition(col("cluster"), pmod(xxhash64(col("vec_id")), lit(f)))
-  }
+  private[llm] def clusterKeyed(df: DataFrame): DataFrame =
+    df.repartition(col("cluster"))
 
   def writeIvfIndex(embeddings: DataFrame, clusterCol: String, dir: String): Unit = {
     val e = asDouble(embeddings, "embedding")
@@ -783,7 +781,7 @@ object Ann {
     for (i <- 2 to iters) {
       val ck = if (i == 2) assigned else {
         val c = assigned.localCheckpoint()
-        liveCkpt.foreach(Dedup.freeLocalCheckpoint)
+        liveCkpt.foreach(Artifacts.freeLocalCheckpoint)
         liveCkpt = Some(c)
         c
       }
@@ -806,7 +804,7 @@ object Ann {
     // returned fully lazy as before.
     val out = if (liveCkpt.isDefined) {
       val fin = assigned.localCheckpoint()
-      liveCkpt.foreach(Dedup.freeLocalCheckpoint)
+      liveCkpt.foreach(Artifacts.freeLocalCheckpoint)
       fin
     } else assigned
     out.select(col("vec_id"), col("cluster"), col("ccos"))
@@ -841,12 +839,12 @@ object Ann {
     // minhashLshFromSignatures' measured counter-example) a 3-way fan-out
     // amortizes the materialization at every scale (r15, guide §2.4 /
     // §5 caching: reused AND expensive to recompute).
-    // swapLiveCheckpoint (r16): the result below is a LAZY plan over m, so
+    // Artifacts.swapLiveCheckpoint: the result below is a LAZY plan over m, so
     // m cannot be freed inside this call — but without any release every
     // invocation leaked m's corpus-sized blocks (embedding payloads
     // included) for the session lifetime (r15 advice). The swap bounds the
     // leak to one live copy: the next semanticDedup call frees this one.
-    val m = Dedup.swapLiveCheckpoint("semanticDedup",
+    val m = Artifacts.swapLiveCheckpoint("semanticDedup",
       e.join(broadcast(cents), col(clusterCol) === col("cluster"))
         .withColumn("ccos", round(cosN(e)(col("embedding"), col("centroid")), 6))
         .select(col("vec_id"), col("cluster").cast("long").as("cluster"),

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Artifacts
+
 /** Document deduplication operators for large-scale training-data pipelines.
   *
   * Every operator here is built around one scale rule: NEVER form the n²
@@ -147,10 +149,10 @@ object Dedup {
     * jaccard).
     */
   def sourceOverlap(docs: DataFrame, n: Int = 3): DataFrame = {
-    // swapLiveCheckpoint (r16): the returned matrix is a lazy plan over ss,
-    // so ss cannot be freed here — the swap bounds the former
+    // Artifacts.swapLiveCheckpoint: the returned matrix is a lazy plan over
+    // ss, so ss cannot be freed here — the swap bounds the former
     // session-lifetime leak to one live |distinct shingles|-sized copy
-    val ss = swapLiveCheckpoint("sourceOverlap", shingles(docs, n)
+    val ss = Artifacts.swapLiveCheckpoint("sourceOverlap", shingles(docs, n)
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("source"), col("s")).distinct()
       .localCheckpoint())
@@ -316,44 +318,6 @@ object Dedup {
     * root = min(component). Nodes absent from any pair are absent here
     * (callers left-join and coalesce to self, see [[clusterAssignments]]).
     */
-  /** Drop the cached blocks behind a `localCheckpoint`ed frame. The blocks
-    * belong to the checkpointed RDD inside the frame's `LogicalRDD`, not to
-    * the Dataset cache, so `Dataset.unpersist` cannot reach them.
-    *
-    * WARNING: the freed blocks are the ONLY copy of the checkpointed data —
-    * `localCheckpoint` truncates lineage, so there is no recompute path.
-    * Call this only when the frame is provably dead (every action on it has
-    * completed and nothing will reference it again); a use-after-free fails
-    * at RUNTIME with "checkpoint block not found", not at compile time. In
-    * [[components]] the free sits immediately before the `e = next`
-    * reassignment for exactly this reason — keep it there.
-    */
-  private[graft] def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  /** Bound an operator-internal `localCheckpoint` to ONE live copy per
-    * (session, operator): registering a new checkpoint frees the previous
-    * call's blocks (r16, guide §5 — unpersist when done). Operators whose
-    * RESULT must stay a lazy plan over the checkpoint (the multi-consumer
-    * fan-out shapes: [[graft.llm.Ann.semanticDedup]], [[sourceOverlap]])
-    * cannot free inside the call, and without this every invocation leaked
-    * a corpus-sized block set for the session lifetime — a full bench
-    * sweep accumulated four+ copies per operator. CONTRACT (same
-    * sequential-harness assumption the suite's memory sinks document): a
-    * caller must consume the previous invocation's result before invoking
-    * the operator again — the swap frees the blocks that result reads.
-    */
-  private val liveCkpts =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def swapLiveCheckpoint(op: String, df: DataFrame): DataFrame = {
-    val key = s"${System.identityHashCode(df.sparkSession)}:$op"
-    Option(liveCkpts.put(key, df)).foreach(freeLocalCheckpoint)
-    df
-  }
-
   def components(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     val spark = pairs.sparkSession
     var e = pairs
@@ -390,7 +354,7 @@ object Dedup {
       // round's checkpointed edge blocks are dead — free them eagerly
       // instead of waiting for the ContextCleaner's GC-driven sweep, which
       // on a long-lived session can retain O(rounds) full edge sets
-      if (!converged) freeLocalCheckpoint(e)
+      if (!converged) Artifacts.freeLocalCheckpoint(e)
       e = next
       i += 1
     }
@@ -641,7 +605,7 @@ object Dedup {
     // the sample is ≤ n rows: checkpoint it once so the per-config band
     // projections and the truth path reuse the materialized rows instead of
     // re-running the top-n over the signature table per consumer
-    val ssig = swapLiveCheckpoint("lshCalibrationSampled",
+    val ssig = Artifacts.swapLiveCheckpoint("lshCalibrationSampled",
       calibrationSample(sig, n).localCheckpoint())
     val ids = ssig.select(col("doc_id"))
     val ssh = sh.join(broadcast(ids), Seq("doc_id"))

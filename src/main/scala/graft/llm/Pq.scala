@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Artifacts
+
 /** Product quantization (Jégou et al., "Product Quantization for Nearest
   * Neighbor Search", TPAMI 2011) — the codec that makes a 100-TB embedding
   * index fit in memory: the D-dim vector splits into `m` subvectors of
@@ -193,7 +195,7 @@ object Pq {
     for (i <- 2 to iters) {
       val ck = if (i == 2) assigned else {
         val c = assigned.localCheckpoint()
-        liveCkpt.foreach(Dedup.freeLocalCheckpoint)
+        liveCkpt.foreach(Artifacts.freeLocalCheckpoint)
         liveCkpt = Some(c)
         c
       }
@@ -212,7 +214,7 @@ object Pq {
     // don't leave a per-call |vectors|-row block behind for the session
     if (liveCkpt.isDefined) {
       val fin = cents.localCheckpoint()
-      liveCkpt.foreach(Dedup.freeLocalCheckpoint)
+      liveCkpt.foreach(Artifacts.freeLocalCheckpoint)
       fin
     } else cents
   }
@@ -350,10 +352,11 @@ object Pq {
     // m-ways, broadcast-joined the codebook, regrouped by vec_id (one
     // corpus-sized exchange), and re-joined the cluster column (a second
     // exchange). [[codesExpr]] reproduces assign()'s exact argmin/tie rule
-    // per row; the single remaining exchange is the cluster-keyed layout
-    // shuffle ([[Ann.clusterKeyed]], r16) that writes one healthy file per
-    // cluster instead of one per (task × cluster). baseRows rides the
-    // write as an observed metric instead of a third full source pass.
+    // per row; the single remaining exchange is the layout shuffle
+    // ([[Ann.clusterKeyed]], hash-partitioned on the cluster) that writes one
+    // healthy file per cluster instead of one per (task × cluster). baseRows
+    // rides the write as an observed metric instead of a third full source
+    // pass.
     val obs = org.apache.spark.sql.Observation()
     Ann.clusterKeyed(e.join(broadcast(codebookArray(cb)), lit(true))
         .select(col("vec_id"), col(clusterCol).cast("long").as("cluster"),

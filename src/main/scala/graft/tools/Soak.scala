@@ -120,7 +120,7 @@ object Soak {
     }
     val lshRows = graft.llm.Dedup.readLshIndex(spark, lshDir).count()
     val lsh = Series(lshMs.toSeq, lshFiles.toSeq, lshBytes.toSeq)
-    graft.llm.Dedup.freeLocalCheckpoint(sig)
+    graft.core.Artifacts.freeLocalCheckpoint(sig)
 
     // ---- 3. partitioned IVF index: n assign-to-frozen-centroid appends
     //         with partition-local compaction bounded at 8 files/cluster,

@@ -1002,11 +1002,9 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("uncapped near-dedup suite row is env-gated: absent from the default registry") {
-    // the default bench/verify suite must carry no standing super-linear
-    // shape; the uncapped exactness baseline registers only under
-    // GRAFT_UNCAPPED_NEAR_DEDUP=1 (its semantics stay covered by the
-    // capped-vs-exact recall pin above)
-    assume(!sys.env.get("GRAFT_UNCAPPED_NEAR_DEDUP").contains("1"))
+    // the bench/verify suite must carry no standing super-linear shape: the
+    // uncapped exactness baseline has no suite row (its semantics stay
+    // covered by the capped-vs-exact recall pin above)
     assert(!SparkEntry.queries.contains("llm_near_dedup"))
     assert(!SparkEntry.oracleSql.contains("llm_near_dedup"))
     assert(SparkEntry.queries.contains("llm_near_dedup_capped"))

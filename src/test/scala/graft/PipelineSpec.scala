@@ -88,4 +88,20 @@ class PipelineSpec extends AnyFunSuite {
       .orderBy($"entity").collect()
     assert(a.sameElements(b))
   }
+
+  test("a data dir whose name holds glob characters loads through Tables") {
+    import java.nio.file.{Files, Paths}
+    // every character Hadoop's glob syntax gives a meaning, plus a quote
+    val dir = Paths.get(graft.core.Artifacts.scratchDir("graft-tables"))
+      .resolve("q\"uo\\te[1]{a}*?")
+    Files.createDirectories(dir)
+    Seq("events", "nation").foreach { t =>
+      Files.copy(Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet"))
+    }
+    val d = dir.toString
+    assert(graft.core.Tables.nation(spark, d).count() ==
+      graft.core.Tables.nation(spark, sf).count())
+    assert(graft.core.Tables.events(spark, d).count() ==
+      graft.core.Tables.events(spark, sf).count())
+  }
 }
